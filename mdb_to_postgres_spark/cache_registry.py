@@ -1,59 +1,68 @@
-"""ONE place listing every module-level session cache in the package.
+"""The substrate store: one place that caches per-session intermediates.
 
-Every entry is an (applicationId, ...)-keyed dict holding per-session
-artifacts (localCheckpointed substrates, collected models, staged-table
-names). Two hazards apply to all of them — stale-appId entries pinning
-dead-session JVM state, and unbounded growth across sessions — and the
-house answer is sources.tables.session_cache_get, which sweeps foreign
-appIds on every access. This registry exists so the eviction contract is
-testable in ONE parametrized test (tests/test_round10_ops.py) instead of
-per-cache ad-hoc coverage, and so a new cache that bypasses the pattern
-is caught by the source-level audit test.
+A substrate is an intermediate several queries share — the shingle index,
+the pair stats, the IVF assignment, the table catalog. Its builder is a
+function of ``(spark, sf_dir)`` decorated with ``@substrate("label")``:
 
-Exempt from the (app, sf_dir) key shape but still appId-evicting:
-- functions.global_order._BUILD_CACHE — keyed (app, semanticHash, spec),
-  self-evicting + LRU-bounded (_BUILD_CACHE_MAX); covered by its own
-  tests in tests/test_global_order.py.
+    @substrate("dedup.shingles")
+    def doc_shingles(spark, sf_dir):
+        return _shingles(T(spark, sf_dir, "documents"), 3).localCheckpoint()
+
+Calling the decorated function returns the entry for
+``(applicationId, sf_dir)``, building it on first use. The signature admits
+no query parameter: a variant of a builder is a second builder with its own
+label. The store owns the whole policy:
+
+- On each access it drops every entry whose applicationId is not the live
+  session's. Such entries reference a stopped session's localCheckpoint
+  blocks, so keeping them leaks driver memory in long-lived multi-session
+  processes (pytest, the verification driver).
+- A builder that raises stores nothing; the next access builds again.
+- Entries of the live session for other sf_dirs are kept (multi-sf use
+  within one session is supported and tested).
+
+``SESSION_CACHES`` lists ``(label, dict)`` for every builder, filled as the
+decorated modules import (``registry.load_all()`` imports them all). The
+list object is only ever appended to, so a reference taken early sees later
+registrations.
+
+Outside the store: ``functions.global_order._BUILD_CACHE`` is keyed by a
+plan's semanticHash rather than by sf_dir and is LRU-bounded; it evicts
+foreign applicationIds itself and has its own tests.
 """
 
 from __future__ import annotations
 
-from .extensions import dedup, graph, similarity, text_analysis
-from .operators import aggregates, joins, physical, scans, windows
-from .sources import tables
+import functools
+from collections.abc import Callable
+from typing import Any, TypeVar
 
-# (label, cache dict) — every cache here is swept by session_cache_get
-# (or an equivalent inline sweep: _COMP_CACHE, _DF_CACHE) on each access.
-SESSION_CACHES: list[tuple[str, dict]] = [
-    ("tables.df", tables._DF_CACHE),
-    ("dedup.jaccard_pairs", dedup._JACCARD_PAIR_CACHE),
-    ("dedup.incr_base", dedup._INCR_BASE_CACHE),
-    ("dedup.lsh_bands", dedup._LSH_BANDS_CACHE),
-    ("dedup.simhash_chunks", dedup._SIMHASH_CHUNK_CACHE),
-    ("dedup.components", dedup._COMP_CACHE),
-    ("dedup.shingles", dedup._SHINGLE_CACHE),
-    ("dedup.pair_stats", dedup._PAIR_STATS_CACHE),
-    ("text.trigrams", text_analysis._TRIGRAM_CACHE),
-    ("text.ngram_profiles", text_analysis._NGRAM_PROF_CACHE),
-    ("text.char_lm_model", text_analysis._CHAR_LM_MODEL_CACHE),
-    ("text.bm25_index", text_analysis._BM25_INDEX_CACHE),
-    ("text.bigram_lm_model", text_analysis._BIGRAM_LM_CACHE),
-    ("graph.pairs", graph._PAIR_CACHE),
-    ("sim.flat_corpus", similarity._FLAT_CORPUS_CACHE),
-    ("sim.flat_centroids", similarity._FLAT_CENT_CACHE),
-    ("sim.strides", similarity._STRIDE_CACHE),
-    ("sim.ivf_assign", similarity._IVF_ASSIGN_CACHE),
-    ("sim.kmeans_centroids", similarity._KMEANS_CENT_CACHE),
-    ("sim.lsh_buckets", similarity._LSH_BUCK_CACHE),
-    ("sim.lsh_codes", similarity._LSH_CODES_CACHE),
-    ("sim.pq_encode", similarity._PQ_ENC_CACHE),
-    ("sim.pq_dtab", similarity._PQ_DTAB_CACHE),
-    ("win.concurrency_bounds", windows._CONC_BOUNDS_CACHE),
-    ("win.pareto_revenue", windows._PARETO_REV_CACHE),
-    ("win.rfm_entity", windows._RFM_ENTITY_CACHE),
-    ("agg.skew_counts", aggregates._SKEW_COUNTS_CACHE),
-    ("agg.ks_pv", aggregates._KS_PV_CACHE),
-    ("phys.morton", physical._MORTON_CACHE),
-    ("scans.star_userkeys", scans._STAR_USERKEYS_CACHE),
-    ("joins.order_pairs", joins._ORDER_PAIR_CACHE),
-]
+T = TypeVar("T")
+
+SESSION_CACHES: list[tuple[str, dict]] = []
+
+
+def substrate(label: str) -> Callable[[Callable[[Any, str], T]], Callable[[Any, str], T]]:
+    """Register ``build(spark, sf_dir)`` under ``label`` and return its
+    cached accessor."""
+
+    def deco(build: Callable[[Any, str], T]) -> Callable[[Any, str], T]:
+        if any(label == known for known, _ in SESSION_CACHES):
+            raise ValueError(f"duplicate substrate label: {label}")
+        cache: dict = {}
+
+        @functools.wraps(build)
+        def get(spark, sf_dir: str) -> T:
+            app = spark.sparkContext.applicationId
+            for _, entries in SESSION_CACHES:
+                for k in [k for k in entries if k[0] != app]:
+                    del entries[k]
+            key = (app, sf_dir)
+            if key not in cache:
+                cache[key] = build(spark, sf_dir)
+            return cache[key]
+
+        SESSION_CACHES.append((label, cache))
+        return get
+
+    return deco

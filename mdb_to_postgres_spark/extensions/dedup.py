@@ -19,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache_registry import substrate
 from ..registry import query
-from ..sources.tables import T
+from ..sources.tables import T, corpus_ident
 
 # Shared tokenization: lowercase, split on single spaces (corpus text is
 # single-spaced lowercase words; the normalized variant handles messier
@@ -120,10 +121,8 @@ _JACCARD_ORACLE = """
 """
 
 
-_JACCARD_PAIR_CACHE: dict = {}
-
-
 @query("x_dedup_near_jaccard", oracle=_JACCARD_ORACLE)
+@substrate("dedup.jaccard_pairs")
 def x_dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup (#60, deterministic variant): the
     complete (doc_a, doc_b, jaccard >= 0.35) pair list. Integer
@@ -138,14 +137,9 @@ def x_dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     no prefix-candidate overhead), which is provably and test-asserted
     identical to the naive inverted-index self-join this query's DuckDB
     oracle runs."""
-    from ..sources.tables import session_cache_get
-
-    def build() -> DataFrame:
-        return _split_pairs_from(
-            doc_shingles(spark, sf_dir), stats=doc_pair_stats(spark, sf_dir)
-        ).localCheckpoint()
-
-    return session_cache_get(_JACCARD_PAIR_CACHE, spark, sf_dir, build)
+    return _split_pairs_from(
+        doc_shingles(spark, sf_dir), stats=doc_pair_stats(spark, sf_dir)
+    ).localCheckpoint()
 
 
 # Document-frequency cap splitting the exact verify: shingles with df
@@ -438,7 +432,14 @@ def _minhash_coeffs() -> list[tuple[int, int]]:
 
 _MINHASH_AB = _minhash_coeffs()
 
-_INCR_BASE_CACHE: dict = {}
+
+def _md5_base_hash():
+    """The cross-engine MinHash base hash: a 28-bit md5 hex prefix."""
+    return F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("bigint")
+
+
+def _md5_band_sig(cols):
+    return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
 
 
 def _minhash_oracle() -> str:
@@ -556,12 +557,28 @@ def _verify_jaccard(
     return out.select("doc_a", "doc_b", "jaccard")
 
 
-_LSH_BANDS_CACHE: dict = {}
+# The banded index is a per-(session, sf) substrate for each hash kernel —
+# the persisted signature table of a production pipeline (the bucketed
+# saveAsTable variant, join_bucketed_dedup_verify, IS that table);
+# rebuilding it on every call re-ran the full per-shingle hash + 32-way
+# min aggregation (the dominant cost of both registered variants).
+@substrate("dedup.lsh_bands")
+def _lsh_bands_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _minhash_bands(
+        doc_shingles(spark, sf_dir), _md5_base_hash(), _md5_band_sig
+    ).localCheckpoint()
 
 
-def _minhash_lsh_pairs(
-    spark: SparkSession, sf_dir: str, h_col, band_sig, kernel: str
-) -> DataFrame:
+@substrate("dedup.lsh_bands_xxh")
+def _lsh_bands_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _minhash_bands(
+        doc_shingles(spark, sf_dir),
+        F.pmod(F.xxhash64("shingle"), F.lit(_MINHASH_P)),
+        lambda cols: F.xxhash64(*cols),
+    ).localCheckpoint()
+
+
+def _minhash_lsh_pairs(spark: SparkSession, sf_dir: str, bands: DataFrame) -> DataFrame:
     """Shared banded-LSH topology (#60, scale variant): shingle ->
     banded signature index (_minhash_bands) -> bucket join on (band,
     band_sig) -> exact Jaccard verification of candidates only
@@ -569,22 +586,8 @@ def _minhash_lsh_pairs(
     is one groupBy over the shingle index; candidate generation touches
     only bucket collisions. The banded-join shape, not the hash kernel,
     is what carries to 100 TB — the two registered variants below differ
-    ONLY in the kernel plugged in here.
-
-    The banded index is a per-(session, sf, kernel) substrate — the
-    persisted signature table of a production pipeline (the bucketed
-    saveAsTable variant, join_bucketed_dedup_verify, IS that table);
-    rebuilding it on every call re-ran the full per-shingle hash + 32-way
-    min aggregation (the dominant cost of both registered variants)."""
-    from ..sources.tables import session_cache_get
-
+    ONLY in the kernel's banded index passed in here."""
     sh = doc_shingles(spark, sf_dir)
-    bands = session_cache_get(
-        _LSH_BANDS_CACHE,
-        spark,
-        f"{sf_dir}::{kernel}",
-        lambda: _minhash_bands(sh, h_col, band_sig).localCheckpoint(),
-    )
     cand = (
         bands.alias("x")
         .join(bands.alias("y"), ["band", "band_sig"])
@@ -605,15 +608,18 @@ def x_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared with the DuckDB oracle, so the whole pipeline hash-checks
     end-to-end at ~1/32 the hashing cost of naive per-permutation md5.
     Tests assert candidate recall against x_dedup_near_jaccard."""
-    return _minhash_lsh_pairs(
-        spark,
-        sf_dir,
-        h_col=F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("bigint"),
-        band_sig=lambda cols: F.md5(
-            F.concat_ws("|", *[c.cast("string") for c in cols])
-        ),
-        kernel="md5",
-    )
+    return _minhash_lsh_pairs(spark, sf_dir, _lsh_bands_md5(spark, sf_dir))
+
+
+def _is_delta():
+    return F.col("doc_id") % 10 == 7
+
+
+@substrate("dedup.incr_base")
+def _incr_base_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _minhash_bands(
+        doc_shingles(spark, sf_dir).filter(~_is_delta()), _md5_base_hash(), _md5_band_sig
+    ).localCheckpoint()
 
 
 @query(
@@ -640,12 +646,6 @@ def x_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL pipeline restricted to pairs touching a delta doc, and the hash
     check proves the incremental path loses nothing."""
     sh = doc_shingles(spark, sf_dir)
-    h_col = F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("bigint")
-
-    def band_sig(cols):
-        return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
-
-    is_delta = F.col("doc_id") % 10 == 7
     # The BASE index is a per-(session, sf) substrate (production: the
     # persisted banded table, built once per corpus snapshot, read by
     # every batch) — localCheckpointed once. The DELTA signatures are NOT
@@ -657,15 +657,8 @@ def x_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bands 0.21 s -> ckpt+count 0.65 s). Interleaved A/B: 1.24 -> 1.08 s
     # min per call, bit-equal. At 100 TB the trade holds: two delta-sized
     # map passes beat materializing a per-batch index copy on the heap.
-    from ..sources.tables import session_cache_get
-
-    base_bands = session_cache_get(
-        _INCR_BASE_CACHE,
-        spark,
-        sf_dir,
-        lambda: _minhash_bands(sh.filter(~is_delta), h_col, band_sig).localCheckpoint(),
-    )
-    delta_bands = _minhash_bands(sh.filter(is_delta), h_col, band_sig)
+    base_bands = _incr_base_bands(spark, sf_dir)
+    delta_bands = _minhash_bands(sh.filter(_is_delta()), _md5_base_hash(), _md5_band_sig)
     merged = base_bands.unionByName(delta_bands)
     cand = (
         delta_bands.alias("x")
@@ -691,13 +684,7 @@ def x_dedup_minhash_lsh_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine correctness evidence for the shared shape, and
     tests/test_extensions_quality.py asserts both kernels recover the
     same high-Jaccard pairs."""
-    return _minhash_lsh_pairs(
-        spark,
-        sf_dir,
-        h_col=F.pmod(F.xxhash64("shingle"), F.lit(_MINHASH_P)),
-        band_sig=lambda cols: F.xxhash64(*cols),
-        kernel="xxh",
-    )
+    return _minhash_lsh_pairs(spark, sf_dir, _lsh_bands_xxh(spark, sf_dir))
 
 
 _SIMHASH_BITS = 60  # 15 hex chars of md5 -> fits BIGINT in both engines
@@ -743,15 +730,10 @@ def _simhash_oracle() -> str:
     """
 
 
-_SIMHASH_CHUNK_CACHE: dict = {}
-
-
-def _simhash_pairs(spark: SparkSession, sf_dir: str, h_sql: str) -> DataFrame:
-    """Shared SimHash topology: token -> 60-bit hash (``h_sql``, a SQL
+def _simhash_chunks(spark: SparkSession, sf_dir: str, h_sql: str) -> DataFrame:
+    """SimHash signature table: token -> 60-bit hash (``h_sql``, a SQL
     expression over column ``tok``) -> per-bit +/-1 sums -> sign signature
-    -> 15-bit chunk blocking (pigeonhole for Hamming distance <= 3) ->
-    exact popcount filter. The two registered variants differ only in the
-    token-hash kernel.
+    -> 15-bit chunks (doc_id, simhash, chunk_id, chunk_val), checkpointed.
 
     The 60-way bit-sum aggregate and the 60-term signature are built as
     single SQL strings parsed JVM-side: constructing them as nested Column
@@ -779,22 +761,36 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str, h_sql: str) -> DataFrame:
         f"shiftrightunsigned(simhash, {width * c}) & {(1 << width) - 1}"
         for c in range(_SIMHASH_CHUNKS)
     )
-    # The chunked signature table is a per-(session, sf, kernel) substrate
-    # (the signature build — token explode + 60-way bit sums — dominates
-    # both variants; like the banded MinHash index it is the table a
-    # production run persists once per snapshot).
-    from ..sources.tables import session_cache_get
+    return sim.select(
+        "doc_id",
+        "simhash",
+        F.posexplode(F.expr(f"array({chunk_arr})")).alias("chunk_id", "chunk_val"),
+    ).localCheckpoint()
 
-    chunks = session_cache_get(
-        _SIMHASH_CHUNK_CACHE,
-        spark,
-        f"{sf_dir}::{h_sql}",
-        lambda: sim.select(
-            "doc_id",
-            "simhash",
-            F.posexplode(F.expr(f"array({chunk_arr})")).alias("chunk_id", "chunk_val"),
-        ).localCheckpoint(),
+
+# The chunked signature table is a per-(session, sf) substrate for each
+# token-hash kernel (the signature build — token explode + 60-way bit
+# sums — dominates both variants; like the banded MinHash index it is the
+# table a production run persists once per snapshot).
+@substrate("dedup.simhash_chunks")
+def _simhash_chunks_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _simhash_chunks(
+        spark, sf_dir, "cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)"
     )
+
+
+@substrate("dedup.simhash_chunks_xxh")
+def _simhash_chunks_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _simhash_chunks(
+        spark, sf_dir, f"shiftrightunsigned(xxhash64(tok), {64 - _SIMHASH_BITS})"
+    )
+
+
+def _simhash_pairs(chunks: DataFrame) -> DataFrame:
+    """Shared SimHash topology over a kernel's signature chunks: 15-bit
+    chunk blocking (pigeonhole for Hamming distance <= 3) -> exact
+    popcount filter. The two registered variants differ only in the
+    token-hash kernel."""
     cand = (
         chunks.alias("x")
         .join(chunks.alias("y"), ["chunk_id", "chunk_val"])
@@ -820,11 +816,7 @@ def x_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first 15 hex chars of md5 (60 bits, BIGINT-safe) so DuckDB
     reproduces the signature bit-for-bit and the whole pipeline
     hash-checks end-to-end."""
-    return _simhash_pairs(
-        spark,
-        sf_dir,
-        h_sql="cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)",
-    )
+    return _simhash_pairs(_simhash_chunks_md5(spark, sf_dir))
 
 
 @query("x_dedup_simhash_xxh")  # rows-only: xxhash64 has no DuckDB twin
@@ -836,36 +828,18 @@ def x_dedup_simhash_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5 savings grow with tokens/doc). Topology identical to
     x_dedup_simhash, which carries the cross-engine correctness evidence;
     tests assert kernel agreement on recovered pairs."""
-    return _simhash_pairs(
-        spark,
-        sf_dir,
-        h_sql=f"shiftrightunsigned(xxhash64(tok), {64 - _SIMHASH_BITS})",
-    )
+    return _simhash_pairs(_simhash_chunks_xxh(spark, sf_dir))
 
-
-# Converged component tables, cached per (applicationId, sf_dir) so
-# downstream cluster consumers don't re-run the iteration (see
-# x_dedup_components docstring).
-_COMP_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 # The (doc_id, shingle) inverted index is the shared substrate of every
 # shingle-based operator (Jaccard, MinHash banding, contamination scan) —
 # materialize it once per (session, sf) instead of re-exploding the corpus
 # per query. At 100 TB this is the index a pipeline writes to parquet once
 # per snapshot; localCheckpoint is the in-session equivalent.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@substrate("dedup.shingles")
 def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached distinct word-trigram index over the documents table."""
-    from ..sources.tables import session_cache_get
-
-    return session_cache_get(
-        _SHINGLE_CACHE,
-        spark,
-        sf_dir,
-        lambda: _shingles(T(spark, sf_dir, "documents"), 3).localCheckpoint(),
-    )
+    return _shingles(T(spark, sf_dir, "documents"), 3).localCheckpoint()
 
 
 # Shared pair-engine statistics over the corpus shingle index: the
@@ -878,7 +852,6 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tables once per (applicationId, sf_dir) — at 100 TB these are the
 # vocabulary/doc-stats sidecars a dedup pipeline persists beside the
 # inverted index, rebuilt per snapshot, not per query.
-_PAIR_STATS_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def _build_pair_stats(sh: DataFrame, hot_df: int) -> tuple[DataFrame, DataFrame]:
@@ -906,18 +879,12 @@ def _build_pair_stats(sh: DataFrame, hot_df: int) -> tuple[DataFrame, DataFrame]
     return dfreq, doc_stats
 
 
+@substrate("dedup.pair_stats")
 def doc_pair_stats(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Session-cached (dfreq, doc_stats) over doc_shingles at the deployed
     hot cap (_HOT_DF) — the substrate shared by the Jaccard and
     containment pair engines."""
-    from ..sources.tables import session_cache_get
-
-    return session_cache_get(
-        _PAIR_STATS_CACHE,
-        spark,
-        sf_dir,
-        lambda: _build_pair_stats(doc_shingles(spark, sf_dir), _HOT_DF),
-    )
+    return _build_pair_stats(doc_shingles(spark, sf_dir), _HOT_DF)
 
 # Recursive-closure CTE prefix shared by the components query and the
 # canonical-keeper query built on top of it.
@@ -985,16 +952,14 @@ def x_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     — downstream consumers (x_dedup_canonical) reuse the materialized
     clusters instead of re-running the iteration, exactly as a production
     pipeline materializes the cluster table once per corpus snapshot."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _COMP_CACHE if k[0] != app]:  # stale-session eviction
-        del _COMP_CACHE[k]
-    cached = _COMP_CACHE.get((app, sf_dir))
-    if cached is not None:
-        comp = cached
-        sizes = comp.groupBy("component_id").agg(F.count("*").alias("component_size"))
-        return comp.join(sizes, "component_id").select(
-            "doc_id", "component_id", "component_size"
-        )
+    comp = _components(spark, sf_dir)
+    sizes = comp.groupBy("component_id").agg(F.count("*").alias("component_size"))
+    return comp.join(sizes, "component_id").select("doc_id", "component_id", "component_size")
+
+
+@substrate("dedup.components")
+def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The converged (doc_id, component_id) table (see x_dedup_components)."""
     pairs = x_dedup_near_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     edges = (
@@ -1027,12 +992,9 @@ def x_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(graph diameter exceeds the bound; raise max_rounds or switch "
             "to large/small-star doubling)"
         )
-    comp = labels.select(
+    return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("component_id")
     ).localCheckpoint()
-    _COMP_CACHE[(app, sf_dir)] = comp
-    sizes = comp.groupBy("component_id").agg(F.count("*").alias("component_size"))
-    return comp.join(sizes, "component_id").select("doc_id", "component_id", "component_size")
 
 
 @query(
@@ -1700,21 +1662,12 @@ def _ensure_bucketed_bands(spark: SparkSession, sf_dir: str) -> str:
     """Write the banded MinHash signature index as a bucketed table (once
     per sf/session), hash-bucketed AND sorted on band_sig — the persisted
     form of the dedup substrate a 100 TB pipeline maintains between runs."""
-    import os
-
     from ..operators.physical import _clear_stale_location
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    tname = f"minhash_bands_bkt_{tag}"
+    tname = f"minhash_bands_bkt_{corpus_ident(sf_dir)}"
     if not spark.catalog.tableExists(tname):
         _clear_stale_location(spark, tname)
-        sh = doc_shingles(spark, sf_dir)
-        h_col = F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("bigint")
-        bands = _minhash_bands(
-            sh,
-            h_col,
-            lambda cols: F.md5(F.concat_ws("|", *[c.cast("string") for c in cols])),
-        )
+        bands = _minhash_bands(doc_shingles(spark, sf_dir), _md5_base_hash(), _md5_band_sig)
         # ONE combined bucket key: Spark only treats bucketed sides as
         # co-partitioned when the bucket columns cover ALL join keys
         # (spark.sql.requireAllClusterKeysForCoPartition defaults true),

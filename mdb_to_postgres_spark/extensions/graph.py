@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache_registry import substrate
 from ..registry import query
-from ..sources.tables import session_cache_get
 from .dedup import _JACCARD_ORACLE, x_dedup_near_jaccard
 
 _PR_DAMP = 0.85
@@ -30,18 +30,9 @@ _PR_DEC = "DECIMAL(28,15)"
 # query here — materialized once per (session, sf) like the shingle index
 # it derives from (at 100 TB this is the edge table a pipeline writes once
 # per corpus snapshot).
-_PAIR_CACHE: dict = {}
-
-
+@substrate("graph.pairs")
 def _sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return session_cache_get(
-        _PAIR_CACHE,
-        spark,
-        sf_dir,
-        lambda: x_dedup_near_jaccard(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(),
-    )
+    return x_dedup_near_jaccard(spark, sf_dir).select("doc_a", "doc_b").localCheckpoint()
 
 # The Jaccard pair query body, reusable as a CTE prefix: (doc_a, doc_b,
 # jaccard) with doc_a < doc_b.

@@ -19,8 +19,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache_registry import substrate
 from ..registry import query
-from ..sources.tables import T, session_cache_get
+from ..sources.tables import T
 
 # -- shared cosine machinery (fold order matches DuckDB list_reduce) -----
 
@@ -93,17 +94,12 @@ def _parallelize(df: DataFrame) -> DataFrame:
 # (session, sf) via localCheckpoint — the in-session equivalent of the
 # flattened projection table a production pipeline writes next to the
 # embedding parquet.
-_FLAT_CORPUS_CACHE: dict = {}
-
-
+@substrate("sim.flat_corpus")
 def flat_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        e = T(spark, sf_dir, "embeddings")
-        return _parallelize(
-            flat_emb(e.filter(F.col("vec_id") >= 20), "neighbor_id", "c")
-        ).localCheckpoint()
-
-    return session_cache_get(_FLAT_CORPUS_CACHE, spark, sf_dir, build)
+    e = T(spark, sf_dir, "embeddings")
+    return _parallelize(
+        flat_emb(e.filter(F.col("vec_id") >= 20), "neighbor_id", "c")
+    ).localCheckpoint()
 
 
 # DuckDB twin of the fold above. list_reduce has no init; the implicit
@@ -266,20 +262,15 @@ def _lsh_codes(e: DataFrame, id_col: str) -> DataFrame:
 
 # Corpus-side LSH code table: the persisted bucket index of a real LSH
 # deployment (encode once per corpus snapshot, probe forever). Cached per
-# (session, sf) like flat_corpus/_LSH_BUCK_CACHE — only the 20 query
+# (session, sf) like flat_corpus/_lsh_buckets — only the 20 query
 # vectors' codes are computed per call.
-_LSH_CODES_CACHE: dict = {}
-
-
+@substrate("sim.lsh_codes")
 def _lsh_corpus_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        e = T(spark, sf_dir, "embeddings")
-        c_raw = e.filter(F.col("vec_id") >= 20).select(
-            F.col("vec_id").alias("neighbor_id"), "embedding"
-        )
-        return _lsh_codes(c_raw, "neighbor_id").localCheckpoint()
-
-    return session_cache_get(_LSH_CODES_CACHE, spark, sf_dir, build)
+    e = T(spark, sf_dir, "embeddings")
+    c_raw = e.filter(F.col("vec_id") >= 20).select(
+        F.col("vec_id").alias("neighbor_id"), "embedding"
+    )
+    return _lsh_codes(c_raw, "neighbor_id").localCheckpoint()
 
 
 @query("x_sim_ann_lsh")  # rows-only: random hyperplanes are engine-specific
@@ -325,7 +316,6 @@ _NPROBE = 8  # random (clusterless) corpora are IVF's worst case; probe wide
 # stride 25/44 — sf0.001/0.01 unchanged), and is integer-exact in both
 # engines: ceil(sqrt) of a BIGINT is reproducible (IEEE sqrt is correctly
 # rounded; math.isqrt on the Python side avoids float entirely).
-_STRIDE_CACHE: dict = {}
 
 # GREATEST(..., 1) guards the empty-table divisor (CEIL(SQRT(0)) = 0), for
 # parity with the Python n == 0 branch below.
@@ -336,20 +326,13 @@ _STRIDE_SQL = (
 )
 
 
+@substrate("sim.strides")
 def _centroid_stride(spark: SparkSession, sf_dir: str) -> int:
     import math
 
-    from ..sources.tables import session_cache_get
-
-    def build() -> int:
-        n = T(spark, sf_dir, "embeddings").count()
-        r = math.isqrt(n - 1) + 1 if n > 0 else 1  # = ceil(sqrt(n))
-        return max(_N_CENTROIDS_MOD, n // r)
-
-    # session_cache_get for the stale-appId eviction hygiene the other
-    # substrate memos follow (ADVICE r8) — harmless int values, but a
-    # stopped session's keys should not accumulate in long-lived processes.
-    return session_cache_get(_STRIDE_CACHE, spark, sf_dir, build)
+    n = T(spark, sf_dir, "embeddings").count()
+    r = math.isqrt(n - 1) + 1 if n > 0 else 1  # = ceil(sqrt(n))
+    return max(_N_CENTROIDS_MOD, n // r)
 
 
 def _ivf_oracle() -> str:
@@ -407,54 +390,42 @@ def _ivf_oracle() -> str:
 # re-flattened 64 casts + a norm just to rebuild the same codebook
 # (round 12, guide §6: the probes subtree alone measured 0.41 s min of a
 # 1.24 s call at sf0.1). Cached per (session, sf) like flat_corpus.
-_FLAT_CENT_CACHE: dict = {}
-
-
+@substrate("sim.flat_centroids")
 def flat_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        e = T(spark, sf_dir, "embeddings")
-        return flat_emb(
-            e.filter(F.col("vec_id") % _centroid_stride(spark, sf_dir) == 0),
-            "centroid_id",
-            "t",
-        ).localCheckpoint()
-
-    return session_cache_get(_FLAT_CENT_CACHE, spark, sf_dir, build)
+    e = T(spark, sf_dir, "embeddings")
+    return flat_emb(
+        e.filter(F.col("vec_id") % _centroid_stride(spark, sf_dir) == 0),
+        "centroid_id",
+        "t",
+    ).localCheckpoint()
 
 
 # The thin (neighbor_id, centroid_id) seed-centroid assignment is shared
 # by x_sim_ann_ivf and x_sim_ann_filtered — the same inverted-list table a
 # production deployment persists once and every query probes. Cached per
 # (session, sf) like flat_corpus.
-_IVF_ASSIGN_CACHE: dict = {}
-
-
+@substrate("sim.ivf_assign")
 def ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every corpus vector to its nearest seed centroid. Computed
     THIN — (vector_id, centroid_id) only via max_by with a (sim, -id)
     tiebreak — so the 65 double columns never ride through the
     aggregation shuffle. At 100 TB the inverted lists are exactly this
     thin table, partitioned by centroid_id."""
-
-    def build() -> DataFrame:
-        e = T(spark, sf_dir, "embeddings")
-        cent = flat_centroids(spark, sf_dir)
-        corpus = flat_corpus(spark, sf_dir)
-        cent_sim = dot_flat("c", "t") / (F.col("cnorm") * F.col("tnorm"))
-        return (
-            corpus.crossJoin(F.broadcast(cent))
-            .select("neighbor_id", "centroid_id", cent_sim.alias("cent_sim"))
-            .groupBy("neighbor_id")
-            .agg(
-                F.max_by(
-                    "centroid_id",
-                    F.struct(F.col("cent_sim"), (-F.col("centroid_id")).alias("nid")),
-                ).alias("centroid_id")
-            )
-            .localCheckpoint()
+    cent = flat_centroids(spark, sf_dir)
+    corpus = flat_corpus(spark, sf_dir)
+    cent_sim = dot_flat("c", "t") / (F.col("cnorm") * F.col("tnorm"))
+    return (
+        corpus.crossJoin(F.broadcast(cent))
+        .select("neighbor_id", "centroid_id", cent_sim.alias("cent_sim"))
+        .groupBy("neighbor_id")
+        .agg(
+            F.max_by(
+                "centroid_id",
+                F.struct(F.col("cent_sim"), (-F.col("centroid_id")).alias("nid")),
+            ).alias("centroid_id")
         )
-
-    return session_cache_get(_IVF_ASSIGN_CACHE, spark, sf_dir, build)
+        .localCheckpoint()
+    )
 
 
 @query("x_sim_ann_ivf", oracle=_ivf_oracle())
@@ -556,8 +527,21 @@ def _assign_thin(corpus: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-# Lloyd-trained centroids, cached per (session, sf): see docstring below.
-_KMEANS_CENT_CACHE: dict = {}
+# Lloyd-trained centroids, cached per (session, sf): see the docstring of
+# x_sim_ann_ivf_kmeans.
+@substrate("sim.kmeans_centroids")
+def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    corpus = flat_corpus(spark, sf_dir)
+    cent = flat_centroids(spark, sf_dir)
+    for _ in range(_KMEANS_ITERS):
+        assigned = _assign_thin(corpus, cent, "neighbor_id")
+        members = corpus.join(assigned, "neighbor_id")
+        means = members.groupBy("centroid_id").agg(
+            *[F.avg(f"c{i}").alias(f"t{i}") for i in range(DIM)]
+        )
+        sq = " + ".join(f"t{i} * t{i}" for i in range(DIM))
+        cent = means.withColumn("tnorm", F.expr(f"SQRT({sq})")).localCheckpoint()
+    return cent
 
 
 @query("x_sim_ann_ivf_kmeans")  # rows-only: Lloyd means are float AVGs,
@@ -580,20 +564,7 @@ def x_sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the flat projection comes from the per-(session, sf) substrate cache
     # shared with x_sim_ann_ivf/knn/lsh instead of a per-call checkpoint.
     corpus = flat_corpus(spark, sf_dir)
-
-    def train() -> DataFrame:
-        cent = flat_centroids(spark, sf_dir)
-        for _ in range(_KMEANS_ITERS):
-            assigned = _assign_thin(corpus, cent, "neighbor_id")
-            members = corpus.join(assigned, "neighbor_id")
-            means = members.groupBy("centroid_id").agg(
-                *[F.avg(f"c{i}").alias(f"t{i}") for i in range(DIM)]
-            )
-            sq = " + ".join(f"t{i} * t{i}" for i in range(DIM))
-            cent = means.withColumn("tnorm", F.expr(f"SQRT({sq})")).localCheckpoint()
-        return cent
-
-    cent = session_cache_get(_KMEANS_CENT_CACHE, spark, sf_dir, train)
+    cent = _kmeans_centroids(spark, sf_dir)
     assigned = corpus.join(_assign_thin(corpus, cent, "neighbor_id"), "neighbor_id")
     q = flat_emb(e.filter(F.col("vec_id") < 20), "query_id", "q")
     q_sim = dot_flat("q", "t") / (F.col("qnorm") * F.col("tnorm"))
@@ -722,63 +693,58 @@ def _lsh_sql_oracle() -> str:
 # (vec_id, table_id, bucket) table is built once per (session, sf) and
 # localCheckpoint'ed — exactly the parquet signature table a production
 # pipeline materializes.
-_LSH_BUCK_CACHE: dict = {}
-
-
+@substrate("sim.lsh_buckets")
 def _lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        e = T(spark, sf_dir, "embeddings")
-        # Stage 1: 128 small chunk columns (16 terms each). The
-        # localCheckpoint is a CollapseProject barrier as much as a cache:
-        # without it Catalyst re-fuses chunks+dots+buckets into one Project
-        # whose generated consume method exceeds Janino's 64 KB ceiling and
-        # the whole substrate build drops to interpreted eval.
-        n_chunks = (DIM + _LSH_CHUNK - 1) // _LSH_CHUNK
-        chunk_cols = [
-            F.expr(f"({chunk})").alias(f"c{t}_{b}_{k}")
+    e = T(spark, sf_dir, "embeddings")
+    # Stage 1: 128 small chunk columns (16 terms each). The
+    # localCheckpoint is a CollapseProject barrier as much as a cache:
+    # without it Catalyst re-fuses chunks+dots+buckets into one Project
+    # whose generated consume method exceeds Janino's 64 KB ceiling and
+    # the whole substrate build drops to interpreted eval.
+    n_chunks = (DIM + _LSH_CHUNK - 1) // _LSH_CHUNK
+    chunk_cols = [
+        F.expr(f"({chunk})").alias(f"c{t}_{b}_{k}")
+        for t in range(_LSH_TABLES)
+        for b in range(_LSH_BITS)
+        for k, chunk in enumerate(
+            _lsh_dot_chunks(_LSH_W[t][b], "embedding", False)
+        )
+    ]
+    chunks = e.select("vec_id", *chunk_cols).localCheckpoint()
+    # Stage 2: per-plane dot = left-assoc sum of its chunks — the same
+    # association the chunked oracle SQL spells out.
+    dots = chunks.select(
+        "vec_id",
+        *[
+            sum(
+                [F.col(f"c{t}_{b}_{k}") for k in range(1, n_chunks)],
+                F.col(f"c{t}_{b}_0"),
+            ).alias(f"d{t}_{b}")
             for t in range(_LSH_TABLES)
             for b in range(_LSH_BITS)
-            for k, chunk in enumerate(
-                _lsh_dot_chunks(_LSH_W[t][b], "embedding", False)
-            )
-        ]
-        chunks = e.select("vec_id", *chunk_cols).localCheckpoint()
-        # Stage 2: per-plane dot = left-assoc sum of its chunks — the same
-        # association the chunked oracle SQL spells out.
-        dots = chunks.select(
-            "vec_id",
-            *[
-                sum(
-                    [F.col(f"c{t}_{b}_{k}") for k in range(1, n_chunks)],
-                    F.col(f"c{t}_{b}_0"),
-                ).alias(f"d{t}_{b}")
-                for t in range(_LSH_TABLES)
+        ],
+    )
+    bucket_exprs = [
+        sum(
+            [
+                F.when(F.col(f"d{t}_{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
                 for b in range(_LSH_BITS)
             ],
+            F.lit(0),
+        ).alias(f"bk{t}")
+        for t in range(_LSH_TABLES)
+    ]
+    buck = (
+        dots.select("vec_id", *bucket_exprs)
+        .select(
+            "vec_id",
+            F.posexplode(
+                F.array(*[F.col(f"bk{t}") for t in range(_LSH_TABLES)])
+            ).alias("table_id", "bucket"),
         )
-        bucket_exprs = [
-            sum(
-                [
-                    F.when(F.col(f"d{t}_{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-                    for b in range(_LSH_BITS)
-                ],
-                F.lit(0),
-            ).alias(f"bk{t}")
-            for t in range(_LSH_TABLES)
-        ]
-        buck = (
-            dots.select("vec_id", *bucket_exprs)
-            .select(
-                "vec_id",
-                F.posexplode(
-                    F.array(*[F.col(f"bk{t}") for t in range(_LSH_TABLES)])
-                ).alias("table_id", "bucket"),
-            )
-            .localCheckpoint()
-        )
-        return buck
-
-    return session_cache_get(_LSH_BUCK_CACHE, spark, sf_dir, build)
+        .localCheckpoint()
+    )
+    return buck
 
 
 @query("x_sim_ann_lsh_hyperplane", oracle=_lsh_sql_oracle())
@@ -983,8 +949,131 @@ def _pq_oracle() -> str:
     """
 
 
-_PQ_ENC_CACHE: dict = {}
-_PQ_DTAB_CACHE: dict = {}
+_PQ_NORM_SQL = "SQRT(" + " + ".join(
+    f"CAST(embedding[{i}] AS DOUBLE) * CAST(embedding[{i}] AS DOUBLE)" for i in range(DIM)
+) + ")"
+
+
+def _pq_subspaces(df: DataFrame, id_in: str, id_out: str, prefix: str) -> DataFrame:
+    # unit-normalized values: see _pq_oracle on why (cosine monotone)
+    structs = ", ".join(
+        "struct("
+        + ", ".join(
+            f"(CAST(embedding[{m * _PQ_D + j}] AS DOUBLE) / nrm) AS {prefix}{j}"
+            for j in range(_PQ_D)
+        )
+        + ")"
+        for m in range(_PQ_M)
+    )
+    return (
+        df.withColumn("nrm", F.expr(_PQ_NORM_SQL))
+        .select(
+            F.col(id_in).alias(id_out),
+            F.posexplode(F.expr(f"array({structs})")).alias("m", "s"),
+        )
+        .select(id_out, "m", "s.*")
+    )
+
+
+def _pq_codebook(e: DataFrame) -> DataFrame:
+    return _pq_subspaces(
+        e.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 20 + _PQ_K)), "vec_id", "kid", "cb"
+    ).select((F.col("kid") - 20).alias("k"), "m", *[f"cb{j}" for j in range(_PQ_D)])
+
+
+# The corpus PQ codes are the persisted artifact of a real IVF-PQ
+# deployment (encode once per snapshot, scan forever): cache the
+# thin (neighbor_id, m, code) table per (session, sf) like
+# flat_corpus — only the query-side distance tables are per-call.
+# Cached at NEIGHBOR grain — codes[m] for m = 0.._PQ_M-1 in one array
+# column (still the persisted PQ-codes artifact, 8 small ints per
+# vector). The row-per-(neighbor, m) form forced the ADC below through
+# a join + hash agg; the array form lets it finish inside a projection.
+@substrate("sim.pq_encode")
+def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = T(spark, sf_dir, "embeddings")
+    sub = _pq_subspaces(e.filter(F.col("vec_id") >= 20), "vec_id", "neighbor_id", "v")
+    l2 = F.expr(_pq_l2_sql("v", "cb"))
+    return (
+        sub.join(F.broadcast(_pq_codebook(e)), "m")
+        .select("neighbor_id", "m", "k", l2.alias("l2"))
+        .groupBy("neighbor_id", "m")
+        .agg(F.min_by("k", F.struct("l2", "k")).alias("code"))
+        .groupBy("neighbor_id")
+        .agg(F.array_sort(F.collect_list(F.struct("m", "code"))).alias("mc"))
+        .select("neighbor_id", F.expr("transform(mc, x -> x.code)").alias("codes"))
+        .localCheckpoint()
+    )
+
+
+# ADC distance tables as per-query LITERAL arrays instead of a
+# (enc x dtab) join + groupBy (guide §3/§2.4): the distance table is
+# bounded (n_q * M * K = 2560 doubles at every sf — query count and
+# codebook are constants), so it collects at build time and each
+# (neighbor, query) pair sums its M table entries via O(1)
+# GetArrayItem reads in ONE map-only projection over the cached code
+# table — the M-row-per-pair shuffle and the hash aggregation
+# disappear, and scoring runs register-resident exactly like a real
+# ADC scan. (A broadcast MAP was measured and rejected: Spark's
+# element_at on a non-literal map is a linear scan per lookup.)
+# DECIMAL adds are exact, so the fixed m=0..M-1 order is
+# bit-identical to the old groupBy SUM; collected doubles round-trip
+# bit-exactly through literals.
+# The collected table is a bounded per-(session, sf) model — the same
+# class of artifact as the char-LM map (derived from the data, 2560
+# entries at every sf). The whole LAZY adc plan is memoized with it
+# (plan construction only — nothing materializes; every count() still
+# scores from the code table), because parsing + assembling the
+# 2560-literal expression costs ~0.6 s of driver time per build.
+@substrate("sim.pq_dtab")
+def _pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = T(spark, sf_dir, "embeddings")
+    qsub = _pq_subspaces(e.filter(F.col("vec_id") < 20), "vec_id", "query_id", "q")
+    dtab = qsub.join(F.broadcast(_pq_codebook(e)), "m").select(
+        "query_id", "m", "k", F.round(F.expr(_pq_l2_sql("q", "cb")), 9).alias("d")
+    )
+    enc = _pq_codes(spark, sf_dir)
+    dd = {(r["query_id"], r["m"], r["k"]): r["d"] for r in dtab.collect()}
+    qids = sorted({q for (q, _, _) in dd})
+
+    # ONE SQL string, ONE F.expr: building this from per-literal
+    # Column ops costs ~2.5 s of pure py4j round-trip latency (2560
+    # F.lit calls — the same trap the module docstring records for
+    # per-term dot products). CAST('<repr>' AS DOUBLE) round-trips
+    # the collected doubles bit-exactly (shortest-repr parse), and
+    # constant folding collapses the whole query-table array into one
+    # Literal once per plan.
+    #
+    # Shape note (64 KB method limit): each query's 128-entry distance
+    # table rides INSIDE its exploded struct (x.dt) and the 8 lookups
+    # index that small runtime array AFTER the Generate. Inlining the
+    # lookups into the explode input instead (20 structs x 8
+    # element_at each, one giant unsplittable expression) makes the
+    # Generate's doConsume grow beyond 64 KB — Janino rejects it and
+    # the stage silently runs interpreted, re-paying a failed compile
+    # on every execution.
+    def _qtab(q: int) -> str:
+        vals = ", ".join(
+            f"CAST('{dd[(q, m, k)]!r}' AS DOUBLE)"
+            for m in range(_PQ_M)
+            for k in range(_PQ_K)
+        )
+        return f"array({vals})"
+
+    q_structs = ", ".join(
+        f"named_struct('query_id', CAST({int(q)} AS BIGINT), 'dt', {_qtab(q)})"
+        for q in qids
+    )
+    dist = " + ".join(
+        f"CAST(element_at(x.dt,"
+        f" {m * _PQ_K} + CAST(codes[{m}] AS INT) + 1) AS DECIMAL(28,9))"
+        for m in range(_PQ_M)
+    )
+    return enc.select(
+        "neighbor_id", "codes", F.explode(F.expr(f"array({q_structs})")).alias("x")
+    ).select(
+        "x.query_id", "neighbor_id", F.expr(f"CAST({dist} AS DOUBLE)").alias("pq_dist")
+    )
 
 
 @query("x_sim_ann_ivf_pq", oracle=_pq_oracle())
@@ -1013,126 +1102,7 @@ def x_sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     STUB (tests measure it; a trained k-means codebook — see
     x_sim_ann_ivf_kmeans — is the production fit on real data)."""
     e = T(spark, sf_dir, "embeddings")
-
-    norm_sql = "SQRT(" + " + ".join(
-        f"CAST(embedding[{i}] AS DOUBLE) * CAST(embedding[{i}] AS DOUBLE)" for i in range(DIM)
-    ) + ")"
-
-    def subspaces(df: DataFrame, id_in: str, id_out: str, prefix: str) -> DataFrame:
-        # unit-normalized values: see _pq_oracle on why (cosine monotone)
-        structs = ", ".join(
-            "struct("
-            + ", ".join(
-                f"(CAST(embedding[{m * _PQ_D + j}] AS DOUBLE) / nrm) AS {prefix}{j}"
-                for j in range(_PQ_D)
-            )
-            + ")"
-            for m in range(_PQ_M)
-        )
-        return (
-            df.withColumn("nrm", F.expr(norm_sql))
-            .select(
-                F.col(id_in).alias(id_out),
-                F.posexplode(F.expr(f"array({structs})")).alias("m", "s"),
-            )
-            .select(id_out, "m", "s.*")
-        )
-
-    cb = subspaces(
-        e.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 20 + _PQ_K)), "vec_id", "kid", "cb"
-    ).select((F.col("kid") - 20).alias("k"), "m", *[f"cb{j}" for j in range(_PQ_D)])
-    sub = subspaces(e.filter(F.col("vec_id") >= 20), "vec_id", "neighbor_id", "v")
-    l2 = F.expr(_pq_l2_sql("v", "cb"))
-    # The corpus PQ codes are the persisted artifact of a real IVF-PQ
-    # deployment (encode once per snapshot, scan forever): cache the
-    # thin (neighbor_id, m, code) table per (session, sf) like
-    # flat_corpus — only the query-side distance tables are per-call.
-    # Cached at NEIGHBOR grain — codes[m] for m = 0.._PQ_M-1 in one array
-    # column (still the persisted PQ-codes artifact, 8 small ints per
-    # vector). The row-per-(neighbor, m) form forced the ADC below through
-    # a join + hash agg; the array form lets it finish inside a projection.
-    enc = session_cache_get(
-        _PQ_ENC_CACHE,
-        spark,
-        sf_dir,
-        lambda: (
-            sub.join(F.broadcast(cb), "m")
-            .select("neighbor_id", "m", "k", l2.alias("l2"))
-            .groupBy("neighbor_id", "m")
-            .agg(F.min_by("k", F.struct("l2", "k")).alias("code"))
-            .groupBy("neighbor_id")
-            .agg(F.array_sort(F.collect_list(F.struct("m", "code"))).alias("mc"))
-            .select("neighbor_id", F.expr("transform(mc, x -> x.code)").alias("codes"))
-            .localCheckpoint()
-        ),
-    )
-    qsub = subspaces(e.filter(F.col("vec_id") < 20), "vec_id", "query_id", "q")
-    dtab = qsub.join(F.broadcast(cb), "m").select(
-        "query_id", "m", "k", F.round(F.expr(_pq_l2_sql("q", "cb")), 9).alias("d")
-    )
-    # ADC distance tables as per-query LITERAL arrays instead of a
-    # (enc x dtab) join + groupBy (guide §3/§2.4): the distance table is
-    # bounded (n_q * M * K = 2560 doubles at every sf — query count and
-    # codebook are constants), so it collects at build time and each
-    # (neighbor, query) pair sums its M table entries via O(1)
-    # GetArrayItem reads in ONE map-only projection over the cached code
-    # table — the M-row-per-pair shuffle and the hash aggregation
-    # disappear, and scoring runs register-resident exactly like a real
-    # ADC scan. (A broadcast MAP was measured and rejected: Spark's
-    # element_at on a non-literal map is a linear scan per lookup.)
-    # DECIMAL adds are exact, so the fixed m=0..M-1 order is
-    # bit-identical to the old groupBy SUM; collected doubles round-trip
-    # bit-exactly through literals.
-    # The collected table is a bounded per-(session, sf) model — the same
-    # class of artifact as the char-LM map (derived from the data, 2560
-    # entries at every sf). The whole LAZY adc plan is memoized with it
-    # (plan construction only — nothing materializes; every count() still
-    # scores from the code table), because parsing + assembling the
-    # 2560-literal expression costs ~0.6 s of driver time per build.
-    def _build_adc() -> DataFrame:
-        dd = {(r["query_id"], r["m"], r["k"]): r["d"] for r in dtab.collect()}
-        qids = sorted({q for (q, _, _) in dd})
-
-        # ONE SQL string, ONE F.expr: building this from per-literal
-        # Column ops costs ~2.5 s of pure py4j round-trip latency (2560
-        # F.lit calls — the same trap the module docstring records for
-        # per-term dot products). CAST('<repr>' AS DOUBLE) round-trips
-        # the collected doubles bit-exactly (shortest-repr parse), and
-        # constant folding collapses the whole query-table array into one
-        # Literal once per plan.
-        #
-        # Shape note (64 KB method limit): each query's 128-entry distance
-        # table rides INSIDE its exploded struct (x.dt) and the 8 lookups
-        # index that small runtime array AFTER the Generate. Inlining the
-        # lookups into the explode input instead (20 structs x 8
-        # element_at each, one giant unsplittable expression) makes the
-        # Generate's doConsume grow beyond 64 KB — Janino rejects it and
-        # the stage silently runs interpreted, re-paying a failed compile
-        # on every execution.
-        def _qtab(q: int) -> str:
-            vals = ", ".join(
-                f"CAST('{dd[(q, m, k)]!r}' AS DOUBLE)"
-                for m in range(_PQ_M)
-                for k in range(_PQ_K)
-            )
-            return f"array({vals})"
-
-        q_structs = ", ".join(
-            f"named_struct('query_id', CAST({int(q)} AS BIGINT), 'dt', {_qtab(q)})"
-            for q in qids
-        )
-        dist = " + ".join(
-            f"CAST(element_at(x.dt,"
-            f" {m * _PQ_K} + CAST(codes[{m}] AS INT) + 1) AS DECIMAL(28,9))"
-            for m in range(_PQ_M)
-        )
-        return enc.select(
-            "neighbor_id", "codes", F.explode(F.expr(f"array({q_structs})")).alias("x")
-        ).select(
-            "x.query_id", "neighbor_id", F.expr(f"CAST({dist} AS DOUBLE)").alias("pq_dist")
-        )
-
-    adc = session_cache_get(_PQ_DTAB_CACHE, spark, sf_dir, _build_adc)
+    adc = _pq_adc(spark, sf_dir)
     w_adc = Window.partitionBy("query_id").orderBy(F.asc("pq_dist"), F.asc("neighbor_id"))
     short = (
         adc.withColumn("arn", F.row_number().over(w_adc))

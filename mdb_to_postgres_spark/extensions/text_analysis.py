@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache_registry import substrate
 from ..registry import query
-from ..sources.tables import T, session_cache_get
+from ..sources.tables import T
 
 def _TOKS() -> "F.Column":  # lazy: Column creation needs an active SparkContext
     return F.split(F.lower(F.col("text")), " ")
@@ -540,7 +541,37 @@ def x_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAM_LM_CACHE: dict = {}
+def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, bigram) occurrences of every document's word bigrams."""
+    d = T(spark, sf_dir, "documents")
+    t = d.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("l")).filter(
+        F.size("l") >= 2
+    )
+    return t.select(
+        "doc_id",
+        F.explode(
+            F.expr("transform(sequence(0, size(l)-2), i -> concat_ws(' ', l[i], l[i+1]))")
+        ).alias("bigram"),
+    )
+
+
+@substrate("text.bigram_lm_model")
+def _bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trained (bigram, lp) model of x_text_bigram_score."""
+    bc = _doc_bigrams(spark, sf_dir).groupBy("bigram").agg(F.count("*").alias("bn"))
+    uc = bc.groupBy(F.split(F.col("bigram"), " ")[0].alias("w")).agg(
+        F.sum("bn").alias("un")
+    )
+    return (
+        bc.join(uc, F.split(F.col("bigram"), " ")[0] == F.col("w"))
+        .select(
+            "bigram",
+            F.round(F.log(F.col("bn").cast("double") / F.col("un")), 6)
+            .cast("decimal(18,6)")
+            .alias("lp"),
+        )
+        .localCheckpoint()
+    )
 
 
 @query(
@@ -586,35 +617,8 @@ def x_text_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scored slice's tokenize + one model join; the per-bigram lp is
     computed once per DISTINCT bigram instead of once per occurrence.
     No all-pairs, no driver state."""
-    d = T(spark, sf_dir, "documents")
-    t = d.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("l")).filter(
-        F.size("l") >= 2
-    )
-    bg = t.select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(sequence(0, size(l)-2), i -> concat_ws(' ', l[i], l[i+1]))")
-        ).alias("bigram"),
-    )
-
-    def train_model() -> DataFrame:
-        bc = bg.groupBy("bigram").agg(F.count("*").alias("bn"))
-        uc = bc.groupBy(F.split(F.col("bigram"), " ")[0].alias("w")).agg(
-            F.sum("bn").alias("un")
-        )
-        return (
-            bc.join(uc, F.split(F.col("bigram"), " ")[0] == F.col("w"))
-            .select(
-                "bigram",
-                F.round(F.log(F.col("bn").cast("double") / F.col("un")), 6)
-                .cast("decimal(18,6)")
-                .alias("lp"),
-            )
-            .localCheckpoint()
-        )
-
-    model = session_cache_get(_BIGRAM_LM_CACHE, spark, sf_dir, train_model)
-    scored = bg.filter(F.col("doc_id") < 300).join(model, "bigram")
+    model = _bigram_lm(spark, sf_dir)
+    scored = _doc_bigrams(spark, sf_dir).filter(F.col("doc_id") < 300).join(model, "bigram")
     return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
         # NO final round: the decimal sum is exact and a single IEEE
@@ -774,32 +778,27 @@ FROM cnt GROUP BY doc_id
 # ~3x smaller than the occurrence stream and materializes once per
 # (session, sf) — the trigram profile table a production text-QA stage
 # writes beside the corpus).
-_TRIGRAM_CACHE: dict = {}
-
-
+@substrate("text.trigrams")
 def doc_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        # rebalance before the per-char explode (single-split corpus
-        # would pin one core — the x_dedup_chunk_cdc lesson)
-        d = T(spark, sf_dir, "documents").repartition(
-            max(spark.sparkContext.defaultParallelism * 2, 8), "doc_id"
-        )
-        g = d.select(
-            "doc_id", "lang", F.lower(F.col("text")).alias("t")
-        ).filter(F.length("t") >= 3).select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.expr("transform(sequence(1, length(t) - 2), i -> substring(t, i, 3))")
-            ).alias("g"),
-        )
-        return (
-            g.groupBy("doc_id", "lang", "g")
-            .agg(F.count("*").alias("c"))
-            .localCheckpoint()
-        )
-
-    return session_cache_get(_TRIGRAM_CACHE, spark, sf_dir, build)
+    # rebalance before the per-char explode (single-split corpus
+    # would pin one core — the x_dedup_chunk_cdc lesson)
+    d = T(spark, sf_dir, "documents").repartition(
+        max(spark.sparkContext.defaultParallelism * 2, 8), "doc_id"
+    )
+    g = d.select(
+        "doc_id", "lang", F.lower(F.col("text")).alias("t")
+    ).filter(F.length("t") >= 3).select(
+        "doc_id",
+        "lang",
+        F.explode(
+            F.expr("transform(sequence(1, length(t) - 2), i -> substring(t, i, 3))")
+        ).alias("g"),
+    )
+    return (
+        g.groupBy("doc_id", "lang", "g")
+        .agg(F.count("*").alias("c"))
+        .localCheckpoint()
+    )
 
 
 @query("x_text_qgram_spectrum", oracle=_QGRAM_SQL)
@@ -933,10 +932,6 @@ def x_text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BM25_TERMS = ("hash", "join", "filter")
 
-# The (doc_id, dlen, tf-per-query-term) index table — the persisted
-# artifact of a BM25 deployment, cached per (session, sf) like
-# flat_corpus.
-_BM25_INDEX_CACHE: dict = {}
 _BM25_K1, _BM25_B = 1.2, 0.75
 
 _BM25_SQL = f"""
@@ -974,6 +969,34 @@ ORDER BY bm25 DESC, doc_id LIMIT 20
 """
 
 
+@substrate("text.bm25_index")
+def _bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (doc_id, dlen, tf-per-query-term) index table — the persisted
+    artifact of a BM25 deployment, cached per (session, sf) like
+    flat_corpus (at 100 TB it is the index table written next to the
+    corpus; a query is broadcast joins against it).
+
+    ONE tokenize pass (guide §2.4): doc length and the per-query-term
+    frequencies come out of a single groupBy(doc_id) — before, dl and tf
+    each re-exploded the full token stream (two tokenizations of every
+    document). The scorer unpivots the wide per-doc row to the (doc_id,
+    term, tf) grain; df and the corpus stats re-aggregate the same table.
+    All counts are integers — bit-identical to the two-pass form."""
+    d = T(spark, sf_dir, "documents")
+    tok = d.select("doc_id", F.explode(_TOKS()).alias("term")).filter(F.col("term") != "")
+    return (
+        tok.groupBy("doc_id")
+        .agg(
+            F.count("*").alias("dlen"),
+            *[
+                F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"tf{i}")
+                for i, t in enumerate(_BM25_TERMS)
+            ],
+        )
+        .localCheckpoint()
+    )
+
+
 @query("x_text_bm25_retrieval", oracle=_BM25_SQL)
 def x_text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 lexical retrieval (#64 cont.): top-20 documents for the query
@@ -986,32 +1009,7 @@ def x_text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Corpus stats (N, avgdl) are a broadcast single-row aggregate folded
     into the plan. At 100 TB the df/dl tables are the persisted index; a
     query is two broadcast joins against it."""
-    d = T(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_TOKS()).alias("term")).filter(F.col("term") != "")
-    # ONE tokenize pass (guide §2.4): doc length and the per-query-term
-    # frequencies come out of a single groupBy(doc_id) — before, dl and tf
-    # each re-exploded the full token stream (two tokenizations of every
-    # document). The wide per-doc row then unpivots to the (doc_id, term,
-    # tf) grain the scorer wants; df and the corpus stats re-aggregate
-    # the same table. Cached per (session, sf) like flat_corpus — this IS
-    # the persisted dl/tf index the docstring describes (at 100 TB it is
-    # the index table written next to the corpus; a query is broadcast
-    # joins against it). All counts are integers — bit-identical to the
-    # two-pass form.
-    per_doc = session_cache_get(
-        _BM25_INDEX_CACHE,
-        spark,
-        sf_dir,
-        lambda: tok.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("dlen"),
-            *[
-                F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"tf{i}")
-                for i, t in enumerate(_BM25_TERMS)
-            ],
-        )
-        .localCheckpoint(),
-    )
+    per_doc = _bm25_index(spark, sf_dir)
     stats = per_doc.agg(
         F.count("*").alias("n_docs"), F.avg(F.col("dlen").cast("double")).alias("avgdl")
     )
@@ -1307,9 +1305,40 @@ def x_text_stopword_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NGRAM_LANGS = ("de", "en", "es", "fr", "zh")
 _NGRAM_TOP = 20
+
+
 # Trained language profiles are a per-corpus substrate (like the shingle
 # index): deterministic, tiny (langs x top-k rows), reused across calls.
-_NGRAM_PROF_CACHE: dict = {}
+@substrate("text.ngram_profiles")
+def _ngram_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.window import Window
+
+    lg = (
+        doc_trigram_counts(spark, sf_dir)
+        .groupBy("lang", "g")
+        .agg(F.sum("c").cast("bigint").alias("c_lg"))
+    )
+    cg = lg.groupBy("g").agg(F.sum("c_lg").cast("bigint").alias("c_g"))
+    return (
+        lg.filter(F.col("c_lg") >= 5)
+        .join(cg, "g")
+        .withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.partitionBy("lang").orderBy(
+                    F.desc(F.col("c_lg").cast("double") / F.col("c_g")),
+                    F.desc("c_lg"),
+                    F.asc("g"),
+                )
+            ),
+        )
+        .filter(F.col("rnk") <= _NGRAM_TOP)
+        .select(F.col("lang").alias("p_lang"), "g")
+        # materialized: the profile is a per-corpus substrate (langs x
+        # top-k rows); without it the broadcast build re-derives the
+        # whole training subtree from raw text on every call
+        .localCheckpoint()
+    )
 
 
 @query(
@@ -1380,33 +1409,7 @@ def x_text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than the occurrence stream; this query previously re-exploded it
     # per call — 2.3 s -> 0.55 s warm at sf0.1).
     grams = doc_trigram_counts(spark, sf_dir)
-    from pyspark.sql.window import Window
-
-    def train_profile():
-        lg = grams.groupBy("lang", "g").agg(F.sum("c").cast("bigint").alias("c_lg"))
-        cg = lg.groupBy("g").agg(F.sum("c_lg").cast("bigint").alias("c_g"))
-        return (
-            lg.filter(F.col("c_lg") >= 5)
-            .join(cg, "g")
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    Window.partitionBy("lang").orderBy(
-                        F.desc(F.col("c_lg").cast("double") / F.col("c_g")),
-                        F.desc("c_lg"),
-                        F.asc("g"),
-                    )
-                ),
-            )
-            .filter(F.col("rnk") <= _NGRAM_TOP)
-            .select(F.col("lang").alias("p_lang"), "g")
-            # materialized: the profile is a per-corpus substrate (langs x
-            # top-k rows); without it the broadcast build re-derives the
-            # whole training subtree from raw text on every call
-            .localCheckpoint()
-        )
-
-    prof = session_cache_get(_NGRAM_PROF_CACHE, spark, sf_dir, train_profile)
+    prof = _ngram_profiles(spark, sf_dir)
     scores = (
         grams.join(F.broadcast(prof), "g")
         .groupBy("doc_id", "lang")
@@ -1825,7 +1828,42 @@ def x_text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Trained char-bigram model: a per-corpus substrate like the trigram
 # profiles — at most |alphabet|^2 (bigram -> ppm) ints, reused across calls.
-_CHAR_LM_MODEL_CACHE: dict = {}
+@substrate("text.char_lm_model")
+def _char_lm_model(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    from pyspark.sql.window import Window
+
+    # Rebalance before the per-char explode (single-split corpus
+    # would pin one core — the x_dedup_chunk_cdc lesson). lower()
+    # HOISTED out of the lambda: no CSE across transform() elements.
+    d = (
+        T(spark, sf_dir, "documents")
+        .filter(F.length("text") >= 2)
+        .repartition(max(spark.sparkContext.defaultParallelism * 2, 8), "doc_id")
+    )
+    bg = d.select(F.lower("text").alias("low")).select(
+        F.explode(
+            F.expr(
+                "transform(sequence(0, length(low) - 2),"
+                " i -> substring(low, i + 1, 2))"
+            )
+        ).alias("bigram"),
+    )
+    counts = bg.groupBy("bigram").agg(F.count("*").cast("bigint").alias("c_bg"))
+    model = counts.withColumn(
+        "c_ctx",
+        F.sum("c_bg")
+        .over(Window.partitionBy(F.substring("bigram", 1, 1)))
+        .cast("bigint"),
+    ).select(
+        "bigram",
+        F.round(F.lit(1000000.0) * F.col("c_bg") / F.col("c_ctx"), 0)
+        .cast("bigint")
+        .alias("p_ppm"),
+    )
+    # |alphabet|^2-bounded driver collect (~hundreds of rows) — the
+    # same O(1)-class probe as the global-order offsets.
+    return {r["bigram"]: r["p_ppm"] for r in model.collect()}
+
 
 # Map-literal scoring is only "map-only and cheap" while the model stays
 # alphabet²-small: element_at on create_map is a linear scan and the plan
@@ -1895,42 +1933,7 @@ def x_text_char_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction. A bigram absent from the model scores 0 via coalesce —
     unreachable when scoring the training corpus (the registered form),
     defensive for scoring new text against a cached model."""
-    from pyspark.sql.window import Window
-
-    def train_model():
-        # Rebalance before the per-char explode (single-split corpus
-        # would pin one core — the x_dedup_chunk_cdc lesson). lower()
-        # HOISTED out of the lambda: no CSE across transform() elements.
-        d = (
-            T(spark, sf_dir, "documents")
-            .filter(F.length("text") >= 2)
-            .repartition(max(spark.sparkContext.defaultParallelism * 2, 8), "doc_id")
-        )
-        bg = d.select(F.lower("text").alias("low")).select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, length(low) - 2),"
-                    " i -> substring(low, i + 1, 2))"
-                )
-            ).alias("bigram"),
-        )
-        counts = bg.groupBy("bigram").agg(F.count("*").cast("bigint").alias("c_bg"))
-        model = counts.withColumn(
-            "c_ctx",
-            F.sum("c_bg")
-            .over(Window.partitionBy(F.substring("bigram", 1, 1)))
-            .cast("bigint"),
-        ).select(
-            "bigram",
-            F.round(F.lit(1000000.0) * F.col("c_bg") / F.col("c_ctx"), 0)
-            .cast("bigint")
-            .alias("p_ppm"),
-        )
-        # |alphabet|^2-bounded driver collect (~hundreds of rows) — the
-        # same O(1)-class probe as the global-order offsets.
-        return {r["bigram"]: r["p_ppm"] for r in model.collect()}
-
-    ppm = session_cache_get(_CHAR_LM_MODEL_CACHE, spark, sf_dir, train_model)
+    ppm = _char_lm_model(spark, sf_dir)
     d = (
         T(spark, sf_dir, "documents")
         .filter(F.length("text") >= 2)

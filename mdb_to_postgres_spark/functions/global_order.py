@@ -73,7 +73,7 @@ _DEFAULT_BUCKETS = 64
 # call signature); a hit is confirmed EXACTLY with df.sameSemantics()
 # against the stored frame (semanticHash alone could collide), so a hit
 # can never serve artifacts for a different input. Stale-session keys are
-# evicted like sources.tables.session_cache_get.
+# evicted like the substrate store's (cache_registry).
 _BUILD_CACHE: dict = {}
 _BUILD_MISSES = 0  # test hook: asserts warm calls skip the build jobs
 # LRU bound: each entry pins its input DataFrame (and through it the JVM

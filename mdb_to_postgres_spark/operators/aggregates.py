@@ -13,14 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache_registry import substrate
 from ..functions.compat import CHARGE_EXPR, davg, dsum
 from ..registry import query
 from ..sources.tables import T
 
 # Session-cached checkpointed entity tables feeding the global-order
 # substrate (fresh per-call lineages defeat its build memo — z-order lesson).
-_SKEW_COUNTS_CACHE: dict = {}
-_KS_PV_CACHE: dict = {}
 
 
 @query(
@@ -915,6 +914,16 @@ def agg_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@substrate("agg.skew_counts")
+def _custkey_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        T(spark, sf_dir, "orders")
+        .groupBy("o_custkey")
+        .agg(F.count("*").alias("cnt"))
+        .localCheckpoint()
+    )
+
+
 @query(
     "agg_key_skew_profile",
     oracle="""
@@ -952,17 +961,7 @@ def agg_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no single-partition window over the key set."""
     from ..functions.global_order import global_row_number
 
-    from ..sources.tables import session_cache_get
-
-    counts = session_cache_get(
-        _SKEW_COUNTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: T(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(),
-    )
+    counts = _custkey_counts(spark, sf_dir)
     ranked = global_row_number(
         counts,
         [("cnt", "asc"), ("o_custkey", "asc")],
@@ -1519,6 +1518,20 @@ def agg_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@substrate("agg.ks_pv")
+def _ks_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = T(spark, sf_dir, "events").filter(F.col("event_type").isin("click", "error"))
+    s = ev.select(
+        F.col("value").cast("decimal(18,2)").alias("v"),
+        F.when(F.col("event_type") == "click", 1).otherwise(0).alias("g1"),
+        F.when(F.col("event_type") == "error", 1).otherwise(0).alias("g2"),
+    )
+    return s.groupBy("v").agg(
+        F.sum("g1").cast("bigint").alias("n1_v"),
+        F.sum("g2").cast("bigint").alias("n2_v"),
+    ).localCheckpoint()
+
+
 @query(
     "agg_ks_two_sample",
     oracle="""
@@ -1565,23 +1578,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the distinct values), and a scalar max."""
     from ..functions.global_order import global_cumsum_multi
 
-    ev = T(spark, sf_dir, "events").filter(F.col("event_type").isin("click", "error"))
-    s = ev.select(
-        F.col("value").cast("decimal(18,2)").alias("v"),
-        F.when(F.col("event_type") == "click", 1).otherwise(0).alias("g1"),
-        F.when(F.col("event_type") == "error", 1).otherwise(0).alias("g2"),
-    )
-    from ..sources.tables import session_cache_get
-
-    pv = session_cache_get(
-        _KS_PV_CACHE,
-        spark,
-        sf_dir,
-        lambda: s.groupBy("v").agg(
-            F.sum("g1").cast("bigint").alias("n1_v"),
-            F.sum("g2").cast("bigint").alias("n2_v"),
-        ).localCheckpoint(),
-    )
+    pv = _ks_value_counts(spark, sf_dir)
     cum = global_cumsum_multi(
         pv,
         [("v", "asc")],

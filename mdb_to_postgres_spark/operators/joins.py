@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache_registry import substrate
 from ..functions.compat import REVENUE_EXPR
 from ..registry import query
 from ..sources.tables import T, events_ts, ev_sec_sql
@@ -632,25 +633,18 @@ def join_geo_grid_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ones. Built once per (session, sf) — the self-join over order baskets is
 # the dominant cost of both queries (at 100 TB this is the pair table a
 # pipeline materializes next to the fact table).
-_ORDER_PAIR_CACHE: dict = {}
-
-
+@substrate("joins.order_pairs")
 def order_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import session_cache_get
-
-    def build() -> DataFrame:
-        items = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-        a = items.select("l_orderkey", F.col("l_partkey").alias("pa"))
-        b = items.select("l_orderkey", F.col("l_partkey").alias("pb"))
-        return (
-            a.join(b, "l_orderkey")
-            .filter(F.col("pa") < F.col("pb"))
-            .groupBy("pa", "pb")
-            .agg(F.count("*").alias("c"))
-            .localCheckpoint()
-        )
-
-    return session_cache_get(_ORDER_PAIR_CACHE, spark, sf_dir, build)
+    items = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    a = items.select("l_orderkey", F.col("l_partkey").alias("pa"))
+    b = items.select("l_orderkey", F.col("l_partkey").alias("pb"))
+    return (
+        a.join(b, "l_orderkey")
+        .filter(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count("*").alias("c"))
+        .localCheckpoint()
+    )
 
 
 @query(

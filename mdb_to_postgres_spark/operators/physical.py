@@ -23,14 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.tables import T
-from .scans import _cache_complete, _cache_dir
+from ..cache_registry import substrate
+from ..sources.tables import T, corpus_ident
+from .scans import _artifact
 
 _N_BUCKETS = 8
-
-
-def _tag(sf_dir: str) -> str:
-    return os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
 
 
 def _clear_stale_location(spark: SparkSession, table: str) -> None:
@@ -49,8 +46,8 @@ def _clear_stale_location(spark: SparkSession, table: str) -> None:
 
 def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders/lineitem bucketed by the join key (once per sf/session)."""
-    t_orders = f"orders_bkt_{_tag(sf_dir)}"
-    t_lineitem = f"lineitem_bkt_{_tag(sf_dir)}"
+    t_orders = f"orders_bkt_{corpus_ident(sf_dir)}"
+    t_lineitem = f"lineitem_bkt_{corpus_ident(sf_dir)}"
     if not spark.catalog.tableExists(t_orders):
         _clear_stale_location(spark, t_orders)
         (
@@ -97,16 +94,15 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ensure_status_partitioned(spark: SparkSession, sf_dir: str) -> str:
     """Write orders directory-partitioned by o_orderstatus (once per sf)."""
-    path = _cache_dir(sf_dir, "orders_by_status")
-    if not _cache_complete(path):
-        (
-            T(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-            .write.partitionBy("o_orderstatus")
-            .mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    return _artifact(
+        sf_dir,
+        "orders_by_status",
+        lambda p: T(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
+        .write.partitionBy("o_orderstatus")
+        .mode("overwrite")
+        .parquet(p),
+    )
 
 
 @query(
@@ -154,12 +150,16 @@ def join_dpp_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     insertion (round-1 red test).
     """
     fact_path = _ensure_status_partitioned(spark, sf_dir)
-    dim_path = _cache_dir(sf_dir, "status_dim_v2")
-    if not _cache_complete(dim_path):
-        spark.createDataFrame(
+    dim_path = _artifact(
+        sf_dir,
+        "status_dim_v2",
+        lambda p: spark.createDataFrame(
             [("O", "open"), ("F", "terminal"), ("P", "open")],
             "status: string, lifecycle: string",
-        ).write.mode("overwrite").parquet(dim_path)
+        )
+        .write.mode("overwrite")
+        .parquet(p),
+    )
     fact = spark.read.parquet(fact_path)
     dim = spark.read.parquet(dim_path).filter(F.col("lifecycle") == "terminal")
     return fact.join(dim, fact.o_orderstatus == dim.status).select(
@@ -319,7 +319,24 @@ def _morton_sql(x: str, y: str, duck: bool) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-_MORTON_CACHE: dict = {}
+# The morton projection is THE clustering artifact a production OPTIMIZE
+# ZORDER materializes once. A per-call checkpoint also defeated the global-
+# order build memo — every call produced a fresh RDD lineage, so the
+# quantile/counts jobs re-ran (and re-paid the 64-term interleave's
+# downstream bucket evaluation) on every invocation.
+@substrate("phys.morton")
+def _morton_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        T(spark, sf_dir, "lineitem")
+        .select(
+            "l_partkey",
+            "l_suppkey",
+            F.expr(_morton_sql("l_partkey", "l_suppkey", False)).alias("morton"),
+            "l_orderkey",
+            "l_linenumber",
+        )
+        .localCheckpoint()
+    )
 
 
 @query(
@@ -364,28 +381,8 @@ def sort_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-table scan cost at 100 TB, where the thin projection is a small
     fraction of the table's width)."""
     from ..functions.global_order import global_row_number, ntile_from_rn
-    from ..sources.tables import session_cache_get
 
-    def build_morton() -> DataFrame:
-        return (
-            T(spark, sf_dir, "lineitem")
-            .select(
-                "l_partkey",
-                "l_suppkey",
-                F.expr(_morton_sql("l_partkey", "l_suppkey", False)).alias("morton"),
-                "l_orderkey",
-                "l_linenumber",
-            )
-            .localCheckpoint()
-        )
-
-    # Session-cached per-corpus substrate (the house pattern): the morton
-    # projection is THE clustering artifact a production OPTIMIZE ZORDER
-    # materializes once. A per-call checkpoint also defeated the global-
-    # order build memo — every call produced a fresh RDD lineage, so the
-    # quantile/counts jobs re-ran (and re-paid the 64-term interleave's
-    # downstream bucket evaluation) on every invocation.
-    z = session_cache_get(_MORTON_CACHE, spark, sf_dir, build_morton)
+    z = _morton_keys(spark, sf_dir)
     # codegen_bucket: this call evaluates the 63-boundary bucket over the
     # full fact substrate EVERY call and the plan is thin — the compiled
     # indicator sum beats the interpreted HOF 1.57 -> 1.08 s at sf0.1

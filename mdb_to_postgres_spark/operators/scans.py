@@ -5,8 +5,8 @@ Here each source/sink format is exercised as a round-trip query whose
 result must equal the original table, so copy fidelity is checked by the
 same hash gate as everything else.
 
-Round-trip artifacts are written under ``.cache/`` in the repo (keyed by
-scale factor) — writing is part of the operator under test.
+Round-trip artifacts are written under ``.cache/<corpus dir name>/`` in
+the repo — writing is part of the operator under test.
 """
 
 from __future__ import annotations
@@ -17,27 +17,41 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache_registry import substrate
 from ..registry import query
 from ..sources.tables import T as tbl
-
-# Session-cached user-key dim input (feeds the global-order substrate;
-# a per-call localCheckpoint would defeat its build memo).
-_STAR_USERKEYS_CACHE: dict = {}
+from ..sources.tables import corpus_tag, read_marker, src_sig
 
 _CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache")
 
 
-def _cache_dir(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(_CACHE, tag, name)
+def _corpus_sig(sf_dir: str) -> str:
+    import glob
+    import hashlib
+
+    sigs = [src_sig(p) for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet")))]
+    return hashlib.md5("|".join(sigs).encode()).hexdigest()
 
 
-def _cache_complete(path: str) -> bool:
-    """A cached artifact counts only with its _SUCCESS marker: a run that
-    died mid-write leaves a partial directory that a bare exists() check
-    would silently serve as complete, corrupting every oracle comparison
-    that reads it back."""
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+def _artifact(sf_dir: str, name: str, write) -> str:
+    """Path of the corpus's on-disk artifact ``name``
+    (``.cache/<corpus dir name>/name``), first written by ``write(path)``.
+
+    The directory is keyed by the corpus directory's name alone, so the
+    marker beside it records which corpus the artifact was written from
+    (every table's size and mtime, like the stream stager's). It is
+    removed before and rewritten only after ``write`` returns: a run that
+    died mid-write, or an artifact of another corpus with the same
+    directory name, is rewritten instead of served."""
+    path = os.path.join(_CACHE, corpus_tag(sf_dir), name)
+    marker, sig = path + ".src", _corpus_sig(sf_dir)
+    if read_marker(marker) != sig:
+        if os.path.exists(marker):
+            os.remove(marker)
+        write(path)
+        with open(marker, "w") as f:
+            f.write(sig)
+    return path
 
 
 @query("scan_parquet", oracle="SELECT * FROM region")
@@ -64,9 +78,14 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Writes nation to CSV once per sf, then reads it back with an explicit
     StructType (extracted-schema discipline, never inference-on-read).
     """
-    path = _cache_dir(sf_dir, "nation_csv")
-    if not _cache_complete(path):
-        tbl(spark, sf_dir, "nation").write.mode("overwrite").option("header", True).csv(path)
+    path = _artifact(
+        sf_dir,
+        "nation_csv",
+        lambda p: tbl(spark, sf_dir, "nation")
+        .write.mode("overwrite")
+        .option("header", True)
+        .csv(p),
+    )
     return spark.read.csv(path, schema=_NATION_SCHEMA, header=True)
 
 
@@ -78,9 +97,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     StructType (never inference-on-read). Doubles survive exactly —
     Spark's JSON writer emits shortest-round-trip representations."""
     src = tbl(spark, sf_dir, "supplier")
-    path = _cache_dir(sf_dir, "supplier_json")
-    if not _cache_complete(path):
-        src.write.mode("overwrite").json(path)
+    path = _artifact(sf_dir, "supplier_json", lambda p: src.write.mode("overwrite").json(p))
     return spark.read.json(path, schema=src.schema)
 
 
@@ -90,9 +107,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized reader for (Hive-ecosystem interchange). Binary-exact
     round-trip: write part to ORC once per sf, read it back."""
     src = tbl(spark, sf_dir, "part")
-    path = _cache_dir(sf_dir, "part_orc")
-    if not _cache_complete(path):
-        src.write.mode("overwrite").orc(path)
+    path = _artifact(sf_dir, "part_orc", lambda p: src.write.mode("overwrite").orc(p))
     return spark.read.orc(path)
 
 
@@ -100,9 +115,11 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def full_table_copy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed 1:1 copy (#4), the reference's flagship op: scan -> columnar
     sink -> scan of the sink must be indistinguishable from the source."""
-    path = _cache_dir(sf_dir, "customer_copy")
-    if not _cache_complete(path):
-        tbl(spark, sf_dir, "customer").write.mode("overwrite").parquet(path)
+    path = _artifact(
+        sf_dir,
+        "customer_copy",
+        lambda p: tbl(spark, sf_dir, "customer").write.mode("overwrite").parquet(p),
+    )
     return spark.read.parquet(path)
 
 
@@ -111,11 +128,14 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned columnar sink (#8). Partitioning by a low-cardinality
     column is the 100 TB layout primitive: downstream filters on the
     partition key prune whole directories."""
-    path = _cache_dir(sf_dir, "orders_by_priority")
-    if not _cache_complete(path):
-        tbl(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-            "o_orderpriority"
-        ).parquet(path)
+    path = _artifact(
+        sf_dir,
+        "orders_by_priority",
+        lambda p: tbl(spark, sf_dir, "orders")
+        .write.mode("overwrite")
+        .partitionBy("o_orderpriority")
+        .parquet(p),
+    )
     df = spark.read.parquet(path)
     # Partition columns come back last; restore canonical order (driver
     # sorts columns by name anyway, but keep the schema stable for entry()).
@@ -380,8 +400,7 @@ def etl_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL, never as a read error. At scale mergeSchema's footer sampling is
     the cost knob; explicit unified StructTypes (extracted-schema
     discipline) replace it once the catalog knows the superset."""
-    path = _cache_dir(sf_dir, "orders_evolving")
-    if not _cache_complete(os.path.join(path, "gen=v2")):
+    def write(path: str) -> None:
         o = tbl(spark, sf_dir, "orders")
         o.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
@@ -389,6 +408,8 @@ def etl_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.filter(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey", "o_totalprice", "o_orderstatus"
         ).write.mode("overwrite").parquet(os.path.join(path, "gen=v2"))
+
+    path = _artifact(sf_dir, "orders_evolving", write)
     merged = spark.read.option("mergeSchema", True).parquet(
         os.path.join(path, "gen=v1"), os.path.join(path, "gen=v2")
     )
@@ -413,8 +434,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     column for quarantine instead of failing the load. DROPMALFORMED /
     FAILFAST are the same reader one option away; at scale quarantined
     raw lines land in a reject sink for replay."""
-    path = _cache_dir(sf_dir, "nation_malformed_csv")
-    if not _cache_complete(path):
+    def write(path: str) -> None:
         n = tbl(spark, sf_dir, "nation")
         line = F.concat_ws(
             ",",
@@ -425,6 +445,8 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         n.select(line.alias("value")).write.mode("overwrite").text(path)
+
+    path = _artifact(sf_dir, "nation_malformed_csv", write)
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.IntegerType()),
@@ -506,15 +528,13 @@ def etl_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFra
     would duplicate). The read-back must equal the full table with only
     urgent prices restated — the oracle says exactly that, so a mode
     regression (wiping or duplicating partitions) hash-fails loudly."""
-    path = _cache_dir(sf_dir, "orders_dyn_overwrite")
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderdate", "o_orderpriority"]
-    # _SUCCESS appears after the BASE write, so it cannot guard this
-    # two-write artifact: a crash between base and restatement would leave
-    # a half-built cache later runs trust. Guard on a marker written only
-    # after the dynamic overwrite lands.
-    done_marker = os.path.join(path, "_RESTATED")
-    if not os.path.exists(done_marker):
+
+    # Two writes, one artifact: _artifact marks it complete only after the
+    # dynamic overwrite lands, so a crash between base and restatement
+    # leaves no half-built cache later runs trust.
+    def write(path: str) -> None:
         src = tbl(spark, sf_dir, "orders").select(*cols)
         src.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
         restated = src.filter(F.col("o_orderpriority") == "1-URGENT").withColumn(
@@ -527,8 +547,8 @@ def etl_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFra
             restated.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        with open(done_marker, "w") as f:
-            f.write("ok")
+
+    path = _artifact(sf_dir, "orders_dyn_overwrite", write)
     return spark.read.parquet(path).select(*cols)
 
 
@@ -595,8 +615,7 @@ def scan_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     producer is fixed. (The key survives for corrupted rows here because
     the corruption injector preserves the prefix — the realistic
     truncated-write failure mode.)"""
-    path = _cache_dir(sf_dir, "nation_malformed_json")
-    if not _cache_complete(path):
+    def write(path: str) -> None:
         n = tbl(spark, sf_dir, "nation")
         line = F.when(
             F.col("n_nationkey") % 7 == 3,
@@ -612,6 +631,8 @@ def scan_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         n.select(line.alias("value")).write.mode("overwrite").text(path)
+
+    path = _artifact(sf_dir, "nation_malformed_json", write)
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.IntegerType()),
@@ -799,9 +820,9 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     files split on line boundaries at maxPartitionBytes, so ingest
     parallelism tracks corpus bytes exactly as at 100 TB."""
     d = tbl(spark, sf_dir, "documents")
-    path = _cache_dir(sf_dir, "documents_text")
-    if not _cache_complete(path):
-        d.select("text").write.mode("overwrite").text(path)
+    path = _artifact(
+        sf_dir, "documents_text", lambda p: d.select("text").write.mode("overwrite").text(p)
+    )
     return (
         spark.read.text(path)
         .groupBy(F.md5("value").alias("line_h"))
@@ -894,6 +915,13 @@ def etl_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+# The distinct user keys feed the global-order substrate; a per-call
+# localCheckpoint would defeat its build memo.
+@substrate("scans.star_userkeys")
+def _star_user_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return tbl(spark, sf_dir, "events").select("user_id").distinct().localCheckpoint()
+
+
 @query(
     "etl_build_star_schema",
     oracle="""
@@ -945,14 +973,7 @@ def etl_build_star_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.global_order import global_row_number
 
     ev = tbl(spark, sf_dir, "events")
-    from ..sources.tables import session_cache_get
-
-    user_keys = session_cache_get(
-        _STAR_USERKEYS_CACHE,
-        spark,
-        sf_dir,
-        lambda: ev.select("user_id").distinct().localCheckpoint(),
-    )
+    user_keys = _star_user_keys(spark, sf_dir)
     dim_user = global_row_number(user_keys, [("user_id", "asc")], "user_sk")
     dim_type = (
         ev.select("event_type")
@@ -1262,15 +1283,17 @@ def etl_export_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over columns the export pass already holds."""
     d = tbl(spark, sf_dir, "documents")
     shard = (F.col("doc_id") % _EXPORT_SHARDS).alias("shard")
-    out = _cache_dir(sf_dir, "export_jsonl")
-    if not _cache_complete(out):
-        (
-            d.select(shard, F.to_json(F.struct("doc_id", "lang", "source", "text")).alias("line"))
-            .repartition(_EXPORT_SHARDS, "shard")
-            .write.partitionBy("shard")
-            .mode("overwrite")
-            .text(out)
+    _artifact(
+        sf_dir,
+        "export_jsonl",
+        lambda p: d.select(
+            shard, F.to_json(F.struct("doc_id", "lang", "source", "text")).alias("line")
         )
+        .repartition(_EXPORT_SHARDS, "shard")
+        .write.partitionBy("shard")
+        .mode("overwrite")
+        .text(p),
+    )
     rec = d.select(
         shard,
         "doc_id",
@@ -1296,9 +1319,11 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip is textually exact; the rowTag is the one mandatory
     option (XML has no default record framing)."""
     src = tbl(spark, sf_dir, "nation")
-    path = _cache_dir(sf_dir, "nation_xml")
-    if not _cache_complete(path):
-        src.write.mode("overwrite").format("xml").option("rowTag", "row").save(path)
+    path = _artifact(
+        sf_dir,
+        "nation_xml",
+        lambda p: src.write.mode("overwrite").format("xml").option("rowTag", "row").save(p),
+    )
     return spark.read.format("xml").option("rowTag", "row").schema(src.schema).load(path)
 
 

@@ -16,16 +16,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache_registry import substrate
 from ..registry import query
-from ..sources.tables import T, events_ts, ev_sec_sql, session_cache_get
+from ..sources.tables import T, events_ts, ev_sec_sql
 
 # Session-cached checkpointed entity tables (per-corpus build artifacts):
 # a per-call localCheckpoint creates a fresh lineage that defeats the
 # global-order build memo (the z-order lesson), so each substrate-feeding
 # entity aggregate is materialized once per (session, sf).
-_CONC_BOUNDS_CACHE: dict = {}
-_PARETO_REV_CACHE: dict = {}
-_RFM_ENTITY_CACHE: dict = {}
 
 
 _EV_SEC = ev_sec_sql()  # generation-derived: see sources/tables.py
@@ -641,6 +639,32 @@ def win_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@substrate("win.concurrency_bounds")
+def _session_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = events_ts(spark, sf_dir).select("user_id", "ts_sec")
+    w_user = Window.partitionBy("user_id").orderBy("ts_sec")
+    marked = ev.withColumn(
+        "new_session",
+        F.when(
+            F.lag("ts_sec").over(w_user).isNull()
+            | (F.col("ts_sec") - F.lag("ts_sec").over(w_user) > 1800),
+            1,
+        ).otherwise(0),
+    )
+    sess_id = marked.withColumn(
+        "sid",
+        F.sum("new_session").over(w_user.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    sessions = sess_id.groupBy("user_id", "sid").agg(
+        F.min("ts_sec").alias("s_start"), (F.max("ts_sec") + 1800).alias("s_end")
+    )
+    return sessions.select(
+        F.col("s_start").alias("t"), F.lit(1).alias("d")
+    ).unionByName(
+        sessions.select(F.col("s_end").alias("t"), F.lit(-1).alias("d"))
+    ).localCheckpoint()
+
+
 @query(
     "win_concurrency_sweep",
     oracle=f"""
@@ -699,33 +723,8 @@ def win_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties). Sessionization itself is the gaps-islands window — one
     shuffle on user_id."""
     from ..functions.global_order import global_cumsum
-    ev = events_ts(spark, sf_dir).select("user_id", "ts_sec")
-    w_user = Window.partitionBy("user_id").orderBy("ts_sec")
-    marked = ev.withColumn(
-        "new_session",
-        F.when(
-            F.lag("ts_sec").over(w_user).isNull()
-            | (F.col("ts_sec") - F.lag("ts_sec").over(w_user) > 1800),
-            1,
-        ).otherwise(0),
-    )
-    sess_id = marked.withColumn(
-        "sid",
-        F.sum("new_session").over(w_user.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    sessions = sess_id.groupBy("user_id", "sid").agg(
-        F.min("ts_sec").alias("s_start"), (F.max("ts_sec") + 1800).alias("s_end")
-    )
-    bounds = session_cache_get(
-        _CONC_BOUNDS_CACHE,
-        spark,
-        sf_dir,
-        lambda: sessions.select(
-            F.col("s_start").alias("t"), F.lit(1).alias("d")
-        ).unionByName(
-            sessions.select(F.col("s_end").alias("t"), F.lit(-1).alias("d"))
-        ).localCheckpoint(),
-    )
+
+    bounds = _session_bounds(spark, sf_dir)
     curve = global_cumsum(
         bounds, [("t", "asc"), ("d", "asc")], F.col("d"), "concurrent", inclusive=True
     )
@@ -998,6 +997,13 @@ def win_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@substrate("win.pareto_revenue")
+def _part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return T(spark, sf_dir, "lineitem").groupBy("l_partkey").agg(
+        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("revenue")
+    ).localCheckpoint()
+
+
 @query(
     "win_pareto_abc",
     oracle="""
@@ -1047,15 +1053,7 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     total)."""
     from ..functions.global_order import global_cumsum
 
-    li = T(spark, sf_dir, "lineitem")
-    rev = session_cache_get(
-        _PARETO_REV_CACHE,
-        spark,
-        sf_dir,
-        lambda: li.groupBy("l_partkey").agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("revenue")
-        ).localCheckpoint(),
-    )
+    rev = _part_revenue(spark, sf_dir)
     ranked = global_cumsum(
         rev,
         [("revenue", "desc"), ("l_partkey", "asc")],
@@ -1670,6 +1668,24 @@ def win_funnel_attribution_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@substrate("win.rfm_entity")
+def _rfm_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = T(spark, sf_dir, "orders")
+    anchor = o.agg(F.max("o_orderdate").alias("mx"))
+    return (
+        o.crossJoin(F.broadcast(anchor))
+        .groupBy(F.col("o_custkey").alias("custkey"))
+        .agg(
+            F.datediff(F.first("mx"), F.max("o_orderdate"))
+            .cast("bigint")
+            .alias("recency_days"),
+            F.count("*").alias("frequency"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("monetary"),
+        )
+        .localCheckpoint()
+    )
+
+
 @query(
     "win_rfm_segmentation",
     oracle="""
@@ -1719,23 +1735,7 @@ def win_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer table scanned 2 + 3 times instead of 3 x 3."""
     from ..functions.global_order import global_row_number_specs, ntile_from_rn
 
-    o = T(spark, sf_dir, "orders")
-    anchor = o.agg(F.max("o_orderdate").alias("mx"))
-    rfm = (
-        o.crossJoin(F.broadcast(anchor))
-        .groupBy(F.col("o_custkey").alias("custkey"))
-        .agg(
-            F.datediff(F.first("mx"), F.max("o_orderdate"))
-            .cast("bigint")
-            .alias("recency_days"),
-            F.count("*").alias("frequency"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("monetary"),
-        )
-    )
-    rfm_plan = rfm
-    rfm = session_cache_get(
-        _RFM_ENTITY_CACHE, spark, sf_dir, lambda: rfm_plan.localCheckpoint()
-    )
+    rfm = _rfm_entity(spark, sf_dir)
     # recency/frequency leading keys are LOW-CARDINALITY (day counts /
     # order counts cluster in a handful of values), which would collapse
     # most rows into a few quantile buckets and degrade the clustered

@@ -14,15 +14,13 @@ identifier sanitization is tier-R surface (operators/projection.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..scratch import scratch_dir
 from ..sources import jdbc
-from ..sources.tables import T
+from ..sources.tables import T, corpus_ident
 
 # One scratch Derby database per (process, sf_dir); reused across calls so
 # repeated driver invocations don't pile up databases. The dir is
@@ -35,8 +33,7 @@ def _derby_url(sf_dir: str) -> str:
     d = _DB_DIRS.get(sf_dir)
     if d is None:
         d = _DB_DIRS[sf_dir] = scratch_dir("mdbspark_derby_")
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    return f"jdbc:derby:{d}/db_{tag};create=true"
+    return f"jdbc:derby:{d}/db_{corpus_ident(sf_dir)};create=true"
 
 
 def _lower_cols(df: DataFrame) -> DataFrame:

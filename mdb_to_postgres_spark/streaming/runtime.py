@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..scratch import release, scratch_dir
+from ..sources.tables import corpus_tag, read_marker, src_parts, src_sig
 
 # File-stream schema factory: the corpus has shipped ts as BIGINT nanos in
 # one generation and TIMESTAMP(US) NTZ in another, so the explicit schema a
@@ -36,51 +37,6 @@ def _events_raw_schema(ts_is_long: bool) -> T.StructType:
     )
 
 
-def _src_sig(path: str) -> str:
-    """Identity of a staged source: (mtime_ns, size) for a single-file
-    table; for a directory table (the scale_corpus replicas write
-    Spark-style part-file directories) the same pair per part file,
-    hashed. A directory's own stat is NOT content identity — parts can
-    be rewritten without touching the dir mtime. Stored INSIDE the stage
-    marker so a regenerated source invalidates the stage. Delegates part
-    enumeration to _src_parts so an empty directory layout raises here
-    too, before any stage marker is written."""
-    if os.path.isdir(path):
-        import hashlib
-
-        sigs = []
-        for p in _src_parts(path):
-            st = os.stat(p)
-            sigs.append(f"{os.path.basename(p)}:{st.st_mtime_ns}:{st.st_size}")
-        return hashlib.md5("|".join(sigs).encode()).hexdigest()
-    st = os.stat(path)
-    return f"{st.st_mtime_ns}:{st.st_size}"
-
-
-def _src_parts(path: str) -> list[str]:
-    """The physical parquet files of a source table: [path] for a
-    single-file table, the sorted part files for a directory table.
-
-    A directory that yields ZERO parts (nested layout, Hive partitioning,
-    non-parquet contents) raises instead of silently staging an empty
-    stream source — an unexpected layout must fail loudly, not return an
-    empty result (round-10 ADVICE)."""
-    if os.path.isdir(path):
-        parts = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        if not parts:
-            raise ValueError(
-                f"directory table {path!r} contains no top-level *.parquet "
-                "part files — nested/Hive-partitioned layouts are not "
-                "supported by the file-stream stager"
-            )
-        return parts
-    return [path]
-
-
 def _stage_root() -> str:
     """Base directory for staged stream sources: the repo-level .cache by
     default, overridable via MDBSPARK_STAGE_ROOT (tests point it at a
@@ -95,14 +51,6 @@ def _stage_root() -> str:
     )
 
 
-def _read_marker(path: str) -> str | None:
-    try:
-        with open(path) as f:
-            return f.read().strip()
-    except OSError:
-        return None
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file-source stream (explicit schema, required
     for file streams and our extracted-schema discipline anyway)."""
@@ -114,11 +62,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the latter hit IsADirectoryError under the old copyfile form
     # (found by the sf1 oracle sweep). In production this is the landing
     # directory micro-batches arrive in.
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    stage = os.path.join(_stage_root(), tag, "events_stream_src")
+    stage = os.path.join(_stage_root(), corpus_tag(sf_dir), "events_stream_src")
     src = f"{sf_dir}/events.parquet"
     sig = os.path.join(os.path.dirname(stage), "events_stream_src.sig")
-    if not os.path.isdir(stage) or _read_marker(sig) != _src_sig(src):
+    if not os.path.isdir(stage) or read_marker(sig) != src_sig(src):
         if os.path.isdir(stage):
             shutil.rmtree(stage)
         os.makedirs(stage, exist_ok=True)
@@ -126,12 +73,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # never leave a partial file that later runs read as complete.
         # The temp lives OUTSIDE the watched directory so the file-stream
         # source can never glob it.
-        for i, part in enumerate(_src_parts(src)):
+        for i, part in enumerate(src_parts(src)):
             tmp = os.path.join(os.path.dirname(stage), "events_stream_src.parquet.tmp")
             shutil.copyfile(part, tmp)
             os.replace(tmp, os.path.join(stage, f"events_{i:04d}.parquet"))
         with open(sig, "w") as f:
-            f.write(_src_sig(src))
+            f.write(src_sig(src))
     from ..sources.tables import T as _scan
 
     ts_is_long = _scan(spark, sf_dir, "events").schema["ts"].dataType.simpleString() == "bigint"
@@ -151,14 +98,13 @@ def read_events_stream_sliced(
     ADVANCING between batches and state actually being evicted.
     (read_events_stream's single staged file collapses to one data batch:
     correct for result parity, blind to state-lifetime bugs.)"""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    stage = os.path.join(_stage_root(), tag, f"events_stream_sliced_{n_slices}")
+    stage = os.path.join(_stage_root(), corpus_tag(sf_dir), f"events_stream_sliced_{n_slices}")
     done = os.path.join(os.path.dirname(stage), f"events_stream_sliced_{n_slices}.done")
     # The marker CONTENT carries the source file's (mtime_ns, size): a
     # regenerated events.parquet at the same sf_dir invalidates the staged
     # slices instead of silently replaying stale data into the eviction
     # tests (round-9 ADVICE).
-    if _read_marker(done) != _src_sig(f"{sf_dir}/events.parquet"):
+    if read_marker(done) != src_sig(f"{sf_dir}/events.parquet"):
         import pyarrow.parquet as pq
 
         if os.path.isdir(stage):
@@ -181,7 +127,7 @@ def read_events_stream_sliced(
             # ordering explicit rather than racing the copy loop's clock
             os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
         with open(done, "w") as f:
-            f.write(_src_sig(f"{sf_dir}/events.parquet"))
+            f.write(src_sig(f"{sf_dir}/events.parquet"))
     from ..sources.tables import T as _scan
 
     ts_is_long = _scan(spark, sf_dir, "events").schema["ts"].dataType.simpleString() == "bigint"

@@ -1,7 +1,7 @@
 """Round-10 depth items: the shared dedup pair-stats substrate, the
 char-LM model-size guard, the global-order memo LRU bound, the staged-
 stream staleness markers, and the ONE parametrized eviction audit over
-the package-wide session-cache registry."""
+the substrate store."""
 
 from __future__ import annotations
 
@@ -13,8 +13,12 @@ import pytest
 
 from conftest import ORACLE_SF, SMOKE_SF
 
-from mdb_to_postgres_spark.cache_registry import SESSION_CACHES
-from mdb_to_postgres_spark.sources.tables import session_cache_get
+from mdb_to_postgres_spark import registry
+from mdb_to_postgres_spark.cache_registry import SESSION_CACHES, substrate
+
+# Every decorated module is imported before the labels are collected, so
+# the parametrization below covers the whole store.
+registry.load_all()
 
 
 # ---------------------------------------------------------------- caches
@@ -24,106 +28,73 @@ from mdb_to_postgres_spark.sources.tables import session_cache_get
     "label,cache", SESSION_CACHES, ids=[l for l, _ in SESSION_CACHES]
 )
 def test_session_cache_sweeps_stale_app_keys(spark, label, cache):
-    """Every registered cache is keyed with applicationId first and the
-    house sweep drops foreign-app keys on access: a key surviving its
+    """Every store entry is keyed with applicationId first and any store
+    access drops foreign-app keys under every label: a key surviving its
     session would pin dead-JVM plans/checkpoint blocks for the process
     lifetime (round-9/10 ADVICE hazard class)."""
+    from mdb_to_postgres_spark.sources.tables import T
+
     app = spark.sparkContext.applicationId
     stale = ("app-dead-beef", "/no/such/sf")
     cache[stale] = "stale-artifact"
-    probe = (app, "__r10_probe__")
-    session_cache_get(cache, spark, "__r10_probe__", lambda: "fresh")
+    T(spark, SMOKE_SF, "region")
+    assert stale not in cache, label
+    assert all(k[0] == app for k in cache), label
+
+
+def test_raising_builder_caches_nothing(spark):
+    calls = []
+
+    @substrate("test.raising")
+    def flaky(spark, sf_dir):
+        calls.append(sf_dir)
+        if len(calls) == 1:
+            raise RuntimeError("build failed")
+        return "built"
+
+    cache = dict(SESSION_CACHES)["test.raising"]
     try:
-        assert stale not in cache, label
-        assert all(k[0] == app for k in cache), label
+        with pytest.raises(RuntimeError):
+            flaky(spark, "/sf")
+        assert cache == {}
+        assert flaky(spark, "/sf") == "built"  # the next access builds again
+        assert calls == ["/sf", "/sf"]
     finally:
-        cache.pop(probe, None)
+        SESSION_CACHES.remove(("test.raising", cache))
 
 
 def test_registry_is_complete():
-    """A new module-level *_CACHE dict that is not registered (or exempt)
-    fails here — the audit cannot silently go stale."""
+    """No module-level *_CACHE dict outside the store: a cache there would
+    bypass its eviction. Exempt: global_order's semanticHash-keyed,
+    LRU-bounded build memo (own tests)."""
     import mdb_to_postgres_spark as pkg
 
-    registered = {id(c) for _, c in SESSION_CACHES}
-    exempt = {
-        "_BUILD_CACHE",  # global_order: own evicting memo, own tests
-    }
+    exempt = {"_BUILD_CACHE"}
     root = os.path.dirname(pkg.__file__)
     decl = re.compile(r"^(_[A-Z_]*CACHE)\s*(?::[^=]+)?=\s*\{\}", re.M)
-    missing = []
+    found = []
     for dirpath, _, files in os.walk(root):
         for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fn)
-            src = open(path).read()
-            for m in decl.finditer(src):
-                var = m.group(1)
-                if var in exempt:
-                    continue
-                # resolve the module object to compare dict identity
-                rel = os.path.relpath(path, os.path.dirname(root))
-                modname = rel[:-3].replace(os.sep, ".")
-                import importlib
-
-                obj = getattr(importlib.import_module(modname), var)
-                if id(obj) not in registered:
-                    missing.append(f"{modname}.{var}")
-    assert not missing, f"unregistered session caches: {missing}"
-
-
-def test_every_cache_is_on_the_house_pattern():
-    """Source audit: each registered cache is populated through
-    session_cache_get, or carries its own inline stale-app sweep
-    (tables._DF_CACHE, dedup._COMP_CACHE)."""
-    import importlib
-    import inspect
-
-    inline_sweep = {"tables.df", "dedup.components"}
-    for label, cache in SESSION_CACHES:
-        # find the module owning this dict
-        owner = None
-        var = None
-        for modname in (
-            "mdb_to_postgres_spark.sources.tables",
-            "mdb_to_postgres_spark.extensions.dedup",
-            "mdb_to_postgres_spark.extensions.graph",
-            "mdb_to_postgres_spark.extensions.similarity",
-            "mdb_to_postgres_spark.extensions.text_analysis",
-            "mdb_to_postgres_spark.operators.aggregates",
-            "mdb_to_postgres_spark.operators.joins",
-            "mdb_to_postgres_spark.operators.physical",
-            "mdb_to_postgres_spark.operators.scans",
-            "mdb_to_postgres_spark.operators.windows",
-        ):
-            mod = importlib.import_module(modname)
-            for name, val in vars(mod).items():
-                if val is cache and name.endswith("CACHE"):
-                    owner, var = mod, name
-                    break
-            if owner:
-                break
-        assert owner is not None, label
-        src = inspect.getsource(owner)
-        on_pattern = re.search(
-            rf"session_cache_get\(\s*\n?\s*{var}", src
-        ) or label in inline_sweep
-        assert on_pattern, f"{label} ({var}) bypasses session_cache_get"
-        if label in inline_sweep:
-            assert re.search(rf"for k in \[k for k in {var} if k\[0\] != app\]", src), (
-                f"{label}: inline sweep missing"
-            )
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                found += [
+                    f"{os.path.relpath(path, root)}:{m.group(1)}"
+                    for m in decl.finditer(open(path).read())
+                    if m.group(1) not in exempt
+                ]
+    assert not found, f"module-level caches outside the store: {found}"
 
 
 def test_table_catalog_evicts_stale_app(spark):
     from mdb_to_postgres_spark.sources import tables
 
-    tables._DF_CACHE[("app-dead-beef", "/no/such/sf", "region")] = "stale"
-    tables.T(spark, SMOKE_SF, "region")
-    assert all(
-        k[0] == spark.sparkContext.applicationId for k in tables._DF_CACHE
-    )
+    cache = dict(SESSION_CACHES)["tables.df"]
+    cache[("app-dead-beef", "/no/such/sf")] = {"region": "stale"}
+    region = tables.T(spark, SMOKE_SF, "region")
+    app = spark.sparkContext.applicationId
+    assert all(k[0] == app for k in cache)
+    assert cache[(app, SMOKE_SF)]["region"] is region
+    assert tables.T(spark, SMOKE_SF, "region") is region
 
 
 # ------------------------------------------------- global-order memo LRU
@@ -162,10 +133,11 @@ def test_pair_stats_substrate_is_shared(spark):
     from mdb_to_postgres_spark.registry import QUERIES
 
     app = spark.sparkContext.applicationId
-    dedup._PAIR_STATS_CACHE.clear()
+    cache = dict(SESSION_CACHES)["dedup.pair_stats"]
+    cache.clear()
     QUERIES["x_dedup_near_jaccard"](spark, SMOKE_SF).count()
     QUERIES["x_dedup_containment"](spark, SMOKE_SF).count()
-    keys = [k for k in dedup._PAIR_STATS_CACHE if k[0] == app]
+    keys = [k for k in cache if k[0] == app]
     assert keys == [(app, SMOKE_SF)], keys
     a = dedup.doc_pair_stats(spark, SMOKE_SF)
     b = dedup.doc_pair_stats(spark, SMOKE_SF)
@@ -235,7 +207,7 @@ def test_sliced_stage_restages_when_source_regenerates(spark, tmp_path):
     done = os.path.join(os.path.dirname(stage), "events_stream_sliced_3.done")
     slice0 = os.path.join(stage, "slice_000.parquet")
     sig1 = open(done).read()
-    assert sig1 == runtime._src_sig(str(sf / "events.parquet"))
+    assert sig1 == runtime.src_sig(str(sf / "events.parquet"))
     ctime1 = os.stat(slice0).st_ctime_ns
     # same content staged again -> no restage (slice untouched)
     runtime.read_events_stream_sliced(spark, str(sf), n_slices=3)
@@ -245,9 +217,57 @@ def test_sliced_stage_restages_when_source_regenerates(spark, tmp_path):
     runtime.read_events_stream_sliced(spark, str(sf), n_slices=3)
     sig2 = open(done).read()
     assert sig2 != sig1
-    assert sig2 == runtime._src_sig(str(sf / "events.parquet"))
+    assert sig2 == runtime.src_sig(str(sf / "events.parquet"))
     assert os.stat(slice0).st_ctime_ns != ctime1, "slices were not re-staged"
     shutil.rmtree(os.path.join(repo, ".cache", tag), ignore_errors=True)
+
+
+# ------------------------------------------------ on-disk artifacts
+
+
+def _repo_cache(tag: str) -> str:
+    return os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".cache", tag)
+
+
+def test_same_name_corpora_do_not_share_artifacts(spark, tmp_path):
+    """Artifacts live under .cache/<corpus dir name>/; a second corpus
+    with the same directory name must get its own rows, not the first
+    one's cached round-trip."""
+    import pyarrow.parquet as pq
+
+    from mdb_to_postgres_spark.registry import QUERIES
+
+    tag = f"same_name_{os.getpid()}"
+    nation = pq.read_table(f"{SMOKE_SF}/nation.parquet")
+    first, second = tmp_path / "a" / tag, tmp_path / "b" / tag
+    for d, rows in ((first, nation), (second, nation.slice(0, 5))):
+        d.mkdir(parents=True)
+        pq.write_table(rows, str(d / "nation.parquet"))
+    try:
+        assert QUERIES["scan_csv"](spark, str(first)).count() == 25
+        assert QUERIES["scan_csv"](spark, str(second)).count() == 5
+        assert QUERIES["scan_csv"](spark, str(first)).count() == 25
+    finally:
+        shutil.rmtree(_repo_cache(tag), ignore_errors=True)
+
+
+def test_bucketed_dedup_on_hyphenated_corpus_dir(spark, tmp_path):
+    """Table names derived from the corpus directory must be identifiers
+    whatever the directory is called."""
+    from mdb_to_postgres_spark.registry import QUERIES
+
+    d = tmp_path / "my-corpus"
+    d.mkdir()
+    shutil.copyfile(f"{SMOKE_SF}/documents.parquet", d / "documents.parquet")
+    try:
+        got = QUERIES["join_bucketed_dedup_verify"](spark, str(d)).toPandas()
+        want = QUERIES["join_bucketed_dedup_verify"](spark, SMOKE_SF).toPandas()
+        key = ["doc_a", "doc_b"]
+        assert got.sort_values(key).reset_index(drop=True).equals(
+            want.sort_values(key).reset_index(drop=True)
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS minhash_bands_bkt_my_corpus")
 
 
 def test_dedup_stream_schema_contract(spark):

@@ -444,12 +444,12 @@ def test_stream_stager_handles_directory_tables(spark, tmp_path, monkeypatch):
     pq.write_table(tbl.slice(0, half), str(ev_dir / "part-00000.parquet"))
     pq.write_table(tbl.slice(half), str(ev_dir / "part-00001.parquet"))
 
-    sig1 = runtime._src_sig(str(ev_dir))
-    assert runtime._src_sig(str(ev_dir)) == sig1  # stable
-    assert len(runtime._src_parts(str(ev_dir))) == 2
+    sig1 = runtime.src_sig(str(ev_dir))
+    assert runtime.src_sig(str(ev_dir)) == sig1  # stable
+    assert len(runtime.src_parts(str(ev_dir))) == 2
     # rewriting a part changes the signature even if the dir stat doesn't
     pq.write_table(tbl.slice(half, 1), str(ev_dir / "part-00001.parquet"))
-    assert runtime._src_sig(str(ev_dir)) != sig1
+    assert runtime.src_sig(str(ev_dir)) != sig1
     pq.write_table(tbl.slice(half), str(ev_dir / "part-00001.parquet"))
 
     stream_df = (
@@ -474,9 +474,9 @@ def test_stream_stager_rejects_empty_directory_layout(tmp_path):
     ev_dir = tmp_path / "events.parquet"
     (ev_dir / "day=2024-01-01").mkdir(parents=True)
     with pytest.raises(ValueError, match="no top-level"):
-        runtime._src_parts(str(ev_dir))
+        runtime.src_parts(str(ev_dir))
     with pytest.raises(ValueError, match="no top-level"):
-        runtime._src_sig(str(ev_dir))
+        runtime.src_sig(str(ev_dir))
 
 
 def test_scratch_registry_release_and_stale_sweep(tmp_path):
