@@ -10,6 +10,7 @@ shuffle-partition count is a tunable, not a hardcode.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -17,6 +18,47 @@ from pyspark.sql import SparkSession
 # overhead; on a real cluster this should be ~2-3x total cores or left to
 # AQE's coalescing (initialPartitionNum high, coalesce down).
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+# Driver JIT profile: HotSpot's tier-4 (C2) thresholds, defaults
+# 5000/600/15000/40000, raised 30x. A session compiles Catalyst, scheduler
+# and launcher code that runs only a few thousand times per process; C2
+# never paid that compile back. JIT was 64-88 of 99-118 CPU s of a
+# perfbench `queries` cold pass and 12-25 of 23-35 CPU s of set-up (4 vCPU).
+# At 30x set-up fell ~26 -> ~17 CPU s and that cold pass ~106 -> ~68.
+# Per-row loops still reach C2, only later: warm passes take 10-16% more
+# wall time. Java 17 floating point is strict in every tier, so results
+# cannot change.
+# Set as defaultJavaOptions, which the launcher prepends to a caller's
+# spark.driver.extraJavaOptions instead of replacing it. Driver only:
+# executors on a cluster keep HotSpot's defaults (in local[N] the driver
+# JVM runs the tasks). Static conf: applies only when the builder launches
+# the JVM.
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=150000 -XX:Tier4MinInvocationThreshold=18000 "
+    "-XX:Tier4CompileThreshold=450000 -XX:Tier4BackEdgeThreshold=1200000"
+)
+
+MAX_DRIVER_MEM_GB = 24
+
+
+def default_driver_memory(meminfo: str | None = None) -> str:
+    """The driver heap ``get_session`` uses unless SPARK_GRAFT_DRIVER_MEM is
+    set: half the host's MemTotal in whole GB, at most 24g (at least 1g).
+
+    ``meminfo`` is the text of /proc/meminfo, read when omitted; 24g when it
+    cannot be read or has no MemTotal line.
+    """
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            meminfo = ""
+    m = re.search(r"^MemTotal:\s+(\d+)\s+kB", meminfo, re.M)
+    if not m:
+        return f"{MAX_DRIVER_MEM_GB}g"
+    half_gb = int(m.group(1)) // (2 * 1024 * 1024)
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, half_gb))}g"
 
 
 def build_conf(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -> SparkSession.Builder:
@@ -37,6 +79,7 @@ def build_conf(builder: SparkSession.Builder, shuffle_partitions: int | None = N
         # Permissive casts (bad values -> NULL), mirroring the reference's
         # tolerant mdb-export -> Postgres load path (SURVEY.md §2.2 #10).
         .config("spark.sql.ansi.enabled", "false")
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
     )
 
 
@@ -48,9 +91,13 @@ def get_session(app_name: str = "mdb-to-postgres-spark") -> SparkSession:
         .appName(app_name)
         # local[N] packs N executor threads into the driver JVM; the 1g
         # default heap starves broadcast builds and hash aggs long before
-        # the 32 threads do. Static conf: applies only when this factory
-        # actually launches the JVM (no-op via getOrCreate on a live one).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # the 32 threads do, so the heap is sized from the host instead.
+        # Static conf: applies only when this factory actually launches the
+        # JVM (no-op via getOrCreate on a live one).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.driver.maxResultSize", "4g")
         # Status-store retention caps. A long-lived local session that runs
         # the full 313-query registry several times (bench's cold + warm
@@ -84,7 +131,7 @@ def get_session(app_name: str = "mdb-to-postgres-spark") -> SparkSession:
         )
         # Round 12 (guide §5): localCheckpoint/broadcast blocks are only
         # released after the ContextCleaner sees their driver references
-        # collected — and a 24 g heap may not take a full GC for many
+        # collected — and a large heap may not take a full GC for many
         # minutes, so a long pass over the registry (dozens of per-call
         # checkpoints) piles storage blocks until the collector stalls
         # mid-query (bench r12 mid-round record: individual queries

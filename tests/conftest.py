@@ -22,15 +22,19 @@ def spark():
     from pyspark.sql import SparkSession
 
     builder = (
-        SparkSession.builder.master("local[4]")
+        # The Tier-1 command exports SPARK_GRAFT_CPUS as the host's core count.
+        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
         .appName("mdb-spark-tests")
         # The 1g default driver heap survived 8 rounds of sf0.01 tests but
         # dies mid-suite once the 10x-replica plan goldens build their
         # substrates on top of ~440 tests' accumulated localCheckpoint
-        # blocks (py4j ConnectionRefused = JVM OOM death, round 9).
+        # blocks (py4j ConnectionRefused = JVM OOM death, round 9). So the
+        # suite keeps a fixed 12g rather than get_session's host-derived
+        # default: lowering it needs its own measured change.
         .config("spark.driver.memory", "12g")
     )
     # Few shuffle partitions: test data is tiny, scheduling dominates.
+    # build_conf also brings the driver JIT profile, so the suite runs under it.
     s = build_conf(builder, shuffle_partitions=4).getOrCreate()
     yield s
     s.stop()
